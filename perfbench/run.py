@@ -15,8 +15,7 @@ held.
 ``--trace 1`` reports the per-layer metrics, from spans the benchmark
 records around its calls into each layer plus Spark's own counters, and
 runs the pinned host canary before and after the window. A per-layer
-metric of a layer the workload never calls reads 0. Span dumps land in
-``.perfbench/traces/``.
+metric of a layer the workload never calls reads 0.
 
 Session: ``local[<cores>]`` with the engine's ``get_spark`` (cores =
 CPUs this process may use; 2 GiB driver heap).
@@ -106,7 +105,7 @@ def main() -> int:
 
     state = os.path.join(ROOT, ".perfbench")
     dirs = {k: os.path.join(state, k)
-            for k in ("data", "spark-local", "tmp", "traces")}
+            for k in ("data", "spark-local", "tmp")}
     for d in dirs.values():
         os.makedirs(d, exist_ok=True)
     cores = len(os.sched_getaffinity(0))
@@ -135,10 +134,13 @@ def main() -> int:
     inp = wl.inputs(dirs["data"], args.seed)
     generate_s = time.perf_counter() - t0
 
-    # Set-up: session start + warm-up, SETUPS times. The first also pays
-    # the imports and the JVM launch (process start -> ready, minus input
-    # generation); each later one stops the SparkContext (untimed) and
-    # builds a new one in the same JVM.
+    # Set-up: session start + warm-up, SETUPS times; setup_s is the median.
+    # The first also pays the imports and the JVM launch (process start ->
+    # ready, minus input generation); each later one stops the SparkContext
+    # (untimed) and builds a new one in the same JVM, so the median is a
+    # warm-JVM set-up. A set-up that launches its own JVM takes ~10 s on a
+    # 4-core host, so five of them would add ~40 s to a ~50 s run; the JVM
+    # launch is reported as session.cold_start_s instead.
     spark, counters, setups = None, None, []
     for i in range(SETUPS):
         if spark is not None:
@@ -217,8 +219,6 @@ def main() -> int:
             "failed_frac": failed / attempted if attempted else 0.0,
             "wrong_results": len(problems),
         })
-        tracer.dump(os.path.join(
-            dirs["traces"], f"{wl.name}-seed{args.seed}.json"))
     else:
         metrics = {
             "setup_s": _median([s[0] for s in setups]),

@@ -3,7 +3,7 @@
 A span has a name, start, end, parent and free attributes. A span opened
 with ``counters=True`` also carries the Spark counters of every job started
 inside it (:mod:`sparkstats`); such spans are never nested, so each job is
-counted once. Spans stay in memory and are written out when the run ends.
+counted once. Spans stay in memory for the run.
 
 With tracing off (``Tracer(None)``) :meth:`Tracer.span` records nothing and
 reads nothing, so the untraced run pays only an empty context manager.
@@ -13,7 +13,6 @@ The time the tracer spends on its own bookkeeping is accumulated in
 
 from __future__ import annotations
 
-import json
 import time
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -97,7 +96,3 @@ class Tracer:
             if s["parent"] == top["id"]) / wall_s
         self.overhead_s += time.perf_counter() - t_in
         return out
-
-    def dump(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump(self.spans, f)

@@ -1,19 +1,20 @@
 """Steadiness tool for the benchmark.
 
     python3 perfbench/steady.py collect DIR [--runs 10] [--seed0 1]
-        [--trace 0|1]
     python3 perfbench/steady.py compare SET_A [SET_B]
 
-``collect`` runs ``BENCHMARK.json``'s command once per workload and seed
-(seeds ``seed0 .. seed0+runs-1``), one run at a time, and keeps each run's
-result line in ``DIR/<workload>.<seed>.json`` (stderr beside it, ``.err``).
+``collect`` runs ``BENCHMARK.json``'s command untraced once per workload
+and seed (seeds ``seed0 .. seed0+runs-1``), one run at a time, and keeps
+each run's result line in ``DIR/<workload>.<seed>.json`` (stderr beside
+it, ``.err``).
 
 ``compare`` prints, per workload and end-to-end metric, the median, first
 and third quartile (``statistics.quantiles(n=4)``) and the spread
 (quartile distance / median) of each set. With two sets it also says
-whether they agree: every spread but ``setup_s``'s within the metric's
-bound, and the second median no worse than the first by more than the
-bound. A spread at or above a third of its bound is flagged ``unsteady``.
+whether they agree: every spread within the metric's bound, and the two
+medians apart by at most the bound (as a share of the first), in either
+direction. A spread at or above a third of its bound is flagged
+``unsteady``.
 Exit status 1 when the sets disagree or a run was incorrect.
 """
 
@@ -36,7 +37,7 @@ def _spec() -> dict:
         return json.load(f)
 
 
-def collect(out: str, runs: int, seed0: int, trace: int) -> None:
+def collect(out: str, runs: int, seed0: int) -> None:
     spec = _spec()
     os.makedirs(out, exist_ok=True)
     for seed in range(seed0, seed0 + runs):
@@ -47,7 +48,7 @@ def collect(out: str, runs: int, seed0: int, trace: int) -> None:
                 proc = subprocess.run(
                     [*spec["command"], "--workload", w, "--seed", str(seed),
                      "--seconds", str(spec["run_seconds"]),
-                     "--trace", str(trace)],
+                     "--trace", "0"],
                     cwd=ROOT, stdout=subprocess.PIPE, stderr=err, text=True,
                     timeout=600)
             lines = proc.stdout.strip().splitlines()
@@ -97,21 +98,19 @@ def compare(set_a: str, set_b: str | None) -> int:
                 med, q1, q3, spread = summary(vals)
                 meds.append(med)
                 flag = ""
-                if name != "setup_s" and spread > bound:
+                if spread > bound:
                     flag, ok = " OVER-BOUND", False
-                elif name != "setup_s" and spread >= bound / 3:
+                elif spread >= bound / 3:
                     flag = " unsteady"
                 row.append(f"n={len(vals)} med={med:.4g} q1={q1:.4g} "
                            f"q3={q3:.4g} spread={spread:.3f}{flag}")
             verdict = ""
             if len(meds) == 2:
-                worse = ((meds[1] - meds[0]) / meds[0]
-                         if m["better"] == "lower"
-                         else (meds[0] - meds[1]) / meds[0])
-                agree = worse <= bound
+                change = (meds[1] - meds[0]) / meds[0]
+                agree = abs(change) <= bound
                 ok &= agree
                 verdict = (f"  {'agree' if agree else 'DISAGREE'} "
-                           f"({worse:+.3f} vs bound {bound})")
+                           f"({change:+.3f} vs bound {bound})")
             print(f"   {name:12s} " + " | ".join(row) + verdict)
     return 0 if ok else 1
 
@@ -123,13 +122,12 @@ def main() -> int:
     c.add_argument("out")
     c.add_argument("--runs", type=int, default=10)
     c.add_argument("--seed0", type=int, default=1)
-    c.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p = sub.add_parser("compare")
     p.add_argument("set_a")
     p.add_argument("set_b", nargs="?")
     args = ap.parse_args()
     if args.cmd == "collect":
-        collect(args.out, args.runs, args.seed0, args.trace)
+        collect(args.out, args.runs, args.seed0)
         return 0
     return compare(args.set_a, args.set_b)
 
