@@ -38,9 +38,10 @@ def _pin_if_small(df):
     wide-text checkpoint in r11). Catalyst propagates origin stats
     through the checkpoint, so downstream size-checked choosers (e.g.
     fact_claims') still see the true estimate."""
-    from ..quality import _estimated_plan_bytes, _session_broadcast_cap
+    from ..quality import _session_broadcast_cap
+    from ..tables import _estimated_bytes
     cap = _session_broadcast_cap(df)
-    est = _estimated_plan_bytes(df)
+    est = _estimated_bytes(df)
     if cap > 0 and est is not None and est <= cap:
         return df.localCheckpoint(eager=False)
     return df

@@ -290,7 +290,8 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
     estimates are only unavailable for non-file relations where a silver
     layout decision does not apply anyway.
     """
-    from ..quality import _estimated_plan_bytes, _session_broadcast_cap
+    from ..quality import _session_broadcast_cap
+    from ..tables import _estimated_bytes
 
     # Estimate the same projection the join consumes, not the full table:
     # column pruning reaches the scan, so the 7-column slice is what the
@@ -299,7 +300,7 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
                         "annual_premium", "deductible", "coverage_limit",
                         "agent_id")
     cap = _session_broadcast_cap(p)
-    est = _estimated_plan_bytes(p)
+    est = _estimated_bytes(p)
     if est is None or (cap > 0 and est <= cap):
         return build_fact_claims(claims, policies, properties)
     return build_fact_claims_bucketed(spark, claims, policies, properties,

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tables import _estimated_bytes
+
 RESULT_SCHEMA = T.StructType([
     T.StructField("check_name", T.StringType(), False),
     T.StructField("table_name", T.StringType(), True),
@@ -251,17 +253,6 @@ def _session_broadcast_cap(df: DataFrame) -> int:
             f"{raw!r}; extend _session_broadcast_cap's suffix table")
 
 
-def _estimated_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate for ``df``'s optimized plan —
-    driver-side metadata only (file sizes for parquet relations), no job.
-    None when the estimate is unavailable."""
-    try:
-        return int(str(df._jdf.queryExecution()
-                       .optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return None
-
-
 def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
              ref_column: str, broadcast_ref: bool | None = None) -> DataFrame:
     """Fact rows whose key is absent from the reference side (the plan
@@ -281,7 +272,7 @@ def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
     keys = ref_df.select(F.col(ref_column).alias(column)).distinct()
     if broadcast_ref is None:
         cap = _session_broadcast_cap(ref_df)
-        est = _estimated_plan_bytes(ref_df)
+        est = _estimated_bytes(ref_df)
         broadcast_ref = cap > 0 and est is not None and est <= cap
     if broadcast_ref:
         keys = F.broadcast(keys)

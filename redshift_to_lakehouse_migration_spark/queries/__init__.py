@@ -95,16 +95,23 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     #    toggle dedup/curation/funnel sites and the components
     #    consumers), cheapest-first within the tier; the remaining
     #    slots are the least-recently-sampled fresh queries (newest
-    #    green round ASC) --
+    #    green round ASC). The shared-estimate/estimator cleanup adds
+    #    the pack/mix and SQL-API pricing queries (their tables.py and
+    #    llm/dedup.py spans) to the stale tier, displacing the four
+    #    most-recently-sampled fresh tail entries --
     "doc_fingerprint",
     "text_stats",
     "token_count_bpe",
     "lang_id",
     "media_decode_stub",
     "embedding_stats",
+    "pack_sequences",
+    "mix_datasets",
     "token_histogram",
+    "pack_sequences_rows",
     "dedup_exact",
     "knn_bruteforce",
+    "sql_api_pricing_summary",
     "doc_repetition_filter",
     "fuzzy_customer_pairs",
     "dedup_embedding_cosine",
@@ -142,10 +149,6 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     "stg_customer",
     "dim_date",
     "frame_sample_plan",
-    "sample_stratified",
-    "binary_metadata",
-    "stg_orders",
-    "sample_per_stratum",
 )
 
 _missing = [n for n in DRIVER_SAMPLE_PRIORITY if n not in QUERIES]

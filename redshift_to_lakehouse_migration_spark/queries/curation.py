@@ -65,8 +65,7 @@ def _gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def contamination_check(spark: SparkSession, sf_dir: str,
-                        bloom_fpp: float | None = None,
-                        materialize: bool = True) -> DataFrame:
+                        bloom_fpp: float | None = None) -> DataFrame:
     """Per-document benchmark contamination: distinct grams, grams shared
     with the benchmark set, and the contaminated flag.
 
@@ -92,7 +91,7 @@ def contamination_check(spark: SparkSession, sf_dir: str,
     degrades to shuffling every exploded corpus gram; the bloom bits
     stay ~30x smaller than the list and keep the join input to
     candidates only — measured 2.1x on a 2M-gram list vs 40M corpus
-    gram rows in tools/bloom_crossover_probe.py."""
+    gram rows (r6, numbers in CHANGES_r6.md)."""
     # The gram table is consumed THREE times (benchmark branch + hits
     # explode + totals), so without the checkpoint the scan→normalize→
     # split→sliding-window subtree runs ~2x over the full corpus per
@@ -101,12 +100,9 @@ def contamination_check(spark: SparkSession, sf_dir: str,
     # corpus gram-build pass, which grows with corpus bytes. Same
     # non-replicated-blocks trade as the shingle checkpoints
     # (llm/dedup.py): at cluster scale, a parquet-materialized gram
-    # table (materialize_minhash-style) is the replicated path.
-    # ``materialize=False`` (the jaccard_pairs toggle contract) skips the
-    # checkpoint — for A/B attribution and for parquet-backed inputs.
-    base = _gram_arrays(spark, sf_dir)
-    if materialize:
-        base = base.localCheckpoint(eager=False)
+    # table (the materialize_minhash / minhash_pairs_from_tables pattern)
+    # is the replicated path.
+    base = _gram_arrays(spark, sf_dir).localCheckpoint(eager=False)
     is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench_grams = (base.filter(is_bench)
                    .select(F.explode("grams").alias("gram")).distinct())

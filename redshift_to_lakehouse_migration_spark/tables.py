@@ -73,8 +73,11 @@ SPREAD_TEXT_MIN_BYTES_PER_CORE = 64 * 1024
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate (driver-side metadata; file bytes
-    for parquet scans). None when unavailable."""
+    """Catalyst's sizeInBytes estimate for ``df``'s optimized plan —
+    driver-side metadata only (file bytes for parquet scans), no job.
+    None when unavailable. The one estimate every size gate reads:
+    :func:`spread`'s floor, ``quality._orphans``' broadcast check, the
+    medallion silver pin and the ``fact_claims`` layout chooser."""
     try:
         return int(str(df._jdf.queryExecution()
                        .optimizedPlan().stats().sizeInBytes()))
@@ -104,11 +107,10 @@ def spread(df: DataFrame, spark: SparkSession,
     unconditional r6 behavior — right for sites whose per-row work is
     extreme at ANY size (blocked Levenshtein, un-checkpointed text
     analytics). An unavailable estimate falls through to the
-    unconditional path (never silently serialize). Skipping also avoids
-    the ~60 ms ``df.rdd`` partition-probe this function otherwise pays
-    per plan build. On a very large cluster the floor grows with the
-    core count, but a table that small needs no cluster-wide
-    parallelism, and genuinely large tables scan wide regardless."""
+    unconditional path (never silently serialize). On a very large
+    cluster the floor grows with the core count, but a table that small
+    needs no cluster-wide parallelism, and genuinely large tables scan
+    wide regardless."""
     target = spark.sparkContext.defaultParallelism
     if min_bytes_per_core is not None:
         est = _estimated_bytes(df)

@@ -77,11 +77,15 @@ def test_calendar_columns(spark):
     assert row.month_name == "July"
 
 
-def test_spread_parallelizes_small_scans_only(spark):
+def test_spread_parallelizes_small_scans_only(spark, tmp_path):
     """spread(): single-partition inputs fan out to defaultParallelism;
     inputs already at/above it pass through unchanged (the cluster-scale
-    no-op contract from SCALE.md)."""
-    from redshift_to_lakehouse_migration_spark.tables import spread
+    no-op contract from SCALE.md). On a parquet scan the byte floor
+    reads Catalyst's size estimate through the private ``_jdf`` path —
+    if a Spark upgrade breaks it, the estimate turns None and every
+    size gate silently takes its fallback branch; fail here instead."""
+    from redshift_to_lakehouse_migration_spark.tables import (
+        _estimated_bytes, spread)
     target = spark.sparkContext.defaultParallelism
     small = spark.range(100).coalesce(1)
     assert small.rdd.getNumPartitions() == 1
@@ -90,6 +94,15 @@ def test_spread_parallelizes_small_scans_only(spark):
     out = spread(big, spark)
     assert out.rdd.getNumPartitions() == target + 4
     assert out is big  # no extra shuffle inserted
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+    assert scan.rdd.getNumPartitions() == 1
+    est = _estimated_bytes(scan)
+    assert isinstance(est, int) and est > 0
+    assert spread(scan, spark, min_bytes_per_core=est) is scan
+    assert spread(scan, spark, min_bytes_per_core=1) \
+        .rdd.getNumPartitions() == target
 
 
 def test_tune_for_session_applies_runtime_confs(spark):

@@ -6,8 +6,15 @@ sides, and no Python row-UDFs in core query plans (whole-stage codegen)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from redshift_to_lakehouse_migration_spark.llm.dedup import (
+    jaccard_pairs, minhash_lsh_pairs, norm_text, shingles)
+from redshift_to_lakehouse_migration_spark.llm.pipeline import funnel
 from redshift_to_lakehouse_migration_spark.queries import QUERIES
+from redshift_to_lakehouse_migration_spark.queries.curation import (
+    contamination_check)
+from redshift_to_lakehouse_migration_spark.tables import load
 
 SF = "/root/testdata/sf0.001"
 
@@ -82,7 +89,6 @@ def test_only_multimodal_stub_uses_python(spark):
 def test_partition_pruning_on_partitioned_fact(spark, tmp_path):
     """State-partitioned fact: a state filter must prune partitions at plan
     time (PartitionFilters), reference `gold/fact_claims.py:99-104`."""
-    from pyspark.sql import functions as F
     df = spark.range(100).select(
         F.col("id"),
         (F.col("id") % 4).cast("string").alias("state"))
@@ -152,6 +158,38 @@ def test_no_cartesian_in_scale_paths(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def _jaccard_pairs(spark):
+    normed = load(spark, SF, "documents").select(
+        "doc_id", norm_text("text").alias("norm"))
+    blocks = normed.select("doc_id",
+                           F.substring("norm", 1, 16).alias("block"))
+    return jaccard_pairs(shingles(normed, "doc_id", "norm"), blocks, 0.4)
+
+
+@pytest.mark.parametrize("build, n_tables", [
+    (_jaccard_pairs, 1),  # the capped shingle-block table
+    (lambda spark: minhash_lsh_pairs(load(spark, SF, "documents"),
+                                     "doc_id", "text"),
+     2),  # shingle table + band table
+    (lambda spark: contamination_check(spark, SF), 1),  # gram arrays
+    # the narrow meta proxy + the connected-components label table (the
+    # Jaccard checkpoint sits under the components' eager checkpoint)
+    (lambda spark: funnel(load(spark, SF, "documents")), 2),
+], ids=["jaccard_pairs", "minhash_lsh_pairs", "contamination_check",
+        "funnel"])
+def test_multi_consumer_inputs_are_checkpointed(spark, build, n_tables):
+    """Each of these plans reads one expensive derived table 3+ times; the
+    localCheckpoint keeps the scan→normalize→shingle/gram subtree from
+    re-running per consumer. Counts the distinct checkpointed tables
+    (LogicalRDD leaves, by RDD id) in the optimized plan, so a dropped
+    checkpoint fails here even though results stay identical."""
+    leaves = build(spark)._jdf.queryExecution().optimizedPlan() \
+        .collectLeaves()
+    rdds = {leaves.apply(i).rdd().id() for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"}
+    assert len(rdds) >= n_tables
+
+
 def test_no_undeclared_corpus_broadcast_hints(spark):
     """Hint-discipline invariant (the r8 sf8.0 OOM class, CHANGES_r8 §9d):
     an ``F.broadcast`` hint bypasses autoBroadcastJoinThreshold, so a hint
@@ -188,9 +226,6 @@ def test_rehinted_corpus_join_flags(spark):
     """A deliberately re-hinted corpus-proportional broadcast must flag
     (the regression the invariant exists to catch), while the same join
     hinted on a fixed-cardinality dim must not."""
-    from pyspark.sql import functions as F
-
-    from redshift_to_lakehouse_migration_spark.tables import load
     from tools.plan_audit import broadcast_hint_corpus_scans
 
     o = load(spark, SF, "orders")

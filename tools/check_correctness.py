@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -33,7 +34,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # --vanilla: run under a bare SparkSession (no engine confs) — the
 # external driver builds its OWN session, so a query whose result

@@ -14,10 +14,12 @@ Usage: python tools/plan_audit.py [sf_dir] > PLANS.md  (or default write)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -338,7 +340,7 @@ def main() -> None:
         lines += ["", "STALE hint declarations (declared signatures the "
                       "plan no longer carries — partial loss included): "
                       f"{stale_hints}."]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries); undeclared: {bad}; "
           f"bounded: {len(bounded)}; stale declarations: {stale}; "

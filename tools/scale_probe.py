@@ -26,16 +26,17 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
        "/root/testdata/sf0.1")
-SF5_DIR = "/root/repo/testdata_sf0.5"
-SF10_DIR = "/root/repo/testdata_sf1.0"
-SF20_DIR = "/root/repo/testdata_sf2.0"
-SF40_DIR = "/root/repo/testdata_sf4.0"
-SF80_DIR = "/root/repo/testdata_sf8.0"
-SF160_DIR = "/root/repo/testdata_sf16.0"
+SF5_DIR = os.path.join(REPO, "testdata_sf0.5")
+SF10_DIR = os.path.join(REPO, "testdata_sf1.0")
+SF20_DIR = os.path.join(REPO, "testdata_sf2.0")
+SF40_DIR = os.path.join(REPO, "testdata_sf4.0")
+SF80_DIR = os.path.join(REPO, "testdata_sf8.0")
+SF160_DIR = os.path.join(REPO, "testdata_sf16.0")
 
 # No quadratic-work probes remain: r8 ran the REGISTERED knn_bruteforce/
 # knn_ivf, whose probe/centroid sets are corpus-proportional slices
@@ -286,7 +287,7 @@ def main() -> None:
                   "Single-run candidates dismissed as noise by the "
                   "median-of-5 re-measure (kept for the record): "
                   + "; ".join(dismissed) + "."]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote SCALING.md; worst x10 {worst10:.1f}x, x5 {worst5:.1f}x")
     spark.stop()
