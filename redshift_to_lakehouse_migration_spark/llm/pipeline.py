@@ -141,35 +141,14 @@ def bench_gram_set(docs: DataFrame) -> DataFrame:
 
 
 def stage_decontaminate(canonical: DataFrame,
-                        all_docs: DataFrame,
-                        bloom_fpp: float | None = None) -> DataFrame:
+                        all_docs: DataFrame) -> DataFrame:
     """Drop benchmark docs themselves and any doc sharing a word
     NGRAM_N-gram with the benchmark set (same rule as
-    `contamination_check`; short docs carry no grams and pass).
-
-    ``bloom_fpp``: as in `contamination_check` — optionally filter
-    each corpus gram array BEFORE the explode with a broadcast Bloom
-    over the benchmark grams (recall-preserving, result-identical;
-    llm/bloom.py). Default OFF: measured r6, the broadcast join
-    already filters map-side at bloom-probe cost on this corpus's
-    tiny gram vocabulary; turn it ON when the decontamination list
-    outgrows the broadcast threshold (the 100 TB big-list regime,
-    quantified in CHANGES_r6.md)."""
-    from .bloom import bloom_filter_grams, build_gram_bloom, with_bloom_bits
-
+    `contamination_check`; short docs carry no grams and pass)."""
     bench_grams = bench_gram_set(all_docs)
     corpus = canonical.filter(F.col("doc_id") % BENCH_MOD != 0)
-    dirty_src, grams_col = corpus, _grams(F.col("text"))
-    if bloom_fpp is not None:
-        # One bench-side computation serves the bloom's two actions and
-        # the exact join (localCheckpoint blocks are not replicated —
-        # executor loss mid-plan re-raises; acceptable for the small side).
-        bench_grams = bench_grams.localCheckpoint(eager=True)
-        bloom = build_gram_bloom(bench_grams, fpp=bloom_fpp)
-        dirty_src = with_bloom_bits(corpus, corpus.sparkSession, bloom)
-        grams_col = bloom_filter_grams(grams_col, bloom)
     dirty = (
-        dirty_src.select("doc_id", F.explode(grams_col).alias("gram"))
+        corpus.select("doc_id", F.explode(_grams(F.col("text"))).alias("gram"))
         .join(F.broadcast(bench_grams), "gram")
         .select("doc_id").distinct()
     )

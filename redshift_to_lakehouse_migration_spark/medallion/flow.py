@@ -18,13 +18,14 @@ from pyspark.sql import functions as F
 
 from .. import schemas as S
 from ..pipeline import Pipeline
+from ..tables import fits_broadcast
 from . import bronze, gold, silver
 
 
 def _pin_if_small(df):
     """Lazy-localCheckpoint a silver output when Catalyst's size estimate
-    fits the session broadcast budget (the ``build_fact_claims_auto`` /
-    ``quality._orphans`` size-check pattern).
+    fits the session broadcast budget (:func:`tables.fits_broadcast`; an
+    unknown size is not pinned).
 
     Each silver output feeds 2–4 downstream gold nodes, so an
     unmaterialized silver re-runs its bronze-parquet scan + cast/trim map
@@ -38,11 +39,7 @@ def _pin_if_small(df):
     wide-text checkpoint in r11). Catalyst propagates origin stats
     through the checkpoint, so downstream size-checked choosers (e.g.
     fact_claims') still see the true estimate."""
-    from ..quality import _session_broadcast_cap
-    from ..tables import _estimated_bytes
-    cap = _session_broadcast_cap(df)
-    est = _estimated_bytes(df)
-    if cap > 0 and est is not None and est <= cap:
+    if fits_broadcast(df):
         return df.localCheckpoint(eager=False)
     return df
 

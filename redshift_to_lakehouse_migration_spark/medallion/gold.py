@@ -33,6 +33,7 @@ from ..functions import (
     tier_case,
 )
 from ..scd2 import init_scd2
+from ..tables import fits_broadcast
 
 COVERAGE_NAMES = {
     "HO3": "Homeowners Special Form",
@@ -273,12 +274,12 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
     builds (VERDICT r10 #5) — the measured SCALE.md #3 economics as an
     automatic policy instead of a doc the caller must read.
 
-    Decision rule, same Catalyst-estimate pattern as the referential-
-    integrity broadcast check (``quality._orphans``): when the POLICIES
-    join input's optimizer size estimate fits the session broadcast
-    budget, the claims⋈policies join is a BroadcastHashJoin — claims is
-    never shuffled, so persisting a bucketed layout buys nothing and
-    costs a table write (measured at 200k policies: plain 0.50 s vs
+    Decision rule, :func:`tables.fits_broadcast` (the predicate the
+    referential-integrity check and the silver pin also use): when the
+    POLICIES join input's optimizer size estimate fits the session
+    broadcast budget, the claims⋈policies join is a BroadcastHashJoin —
+    claims is never shuffled, so persisting a bucketed layout buys
+    nothing and costs a table write (measured at 200k policies: plain 0.50 s vs
     bucketed 1.06 s). Past the budget every plain rebuild pays two
     ``Exchange hashpartitioning(policy_id`` shuffles, and the bucketed
     layout wins 1.29x at 6M policies / 1.45x at 12M with breakeven
@@ -290,18 +291,13 @@ def build_fact_claims_auto(spark: SparkSession, claims: DataFrame,
     estimates are only unavailable for non-file relations where a silver
     layout decision does not apply anyway.
     """
-    from ..quality import _session_broadcast_cap
-    from ..tables import _estimated_bytes
-
     # Estimate the same projection the join consumes, not the full table:
     # column pruning reaches the scan, so the 7-column slice is what the
     # broadcast would actually hold.
     p = policies.select("policy_id", "property_id", "coverage_type_code",
                         "annual_premium", "deductible", "coverage_limit",
                         "agent_id")
-    cap = _session_broadcast_cap(p)
-    est = _estimated_bytes(p)
-    if est is None or (cap > 0 and est <= cap):
+    if fits_broadcast(p) is not False:
         return build_fact_claims(claims, policies, properties)
     return build_fact_claims_bucketed(spark, claims, policies, properties,
                                       n_buckets=n_buckets,

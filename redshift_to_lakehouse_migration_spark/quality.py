@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import _estimated_bytes
+from .tables import fits_broadcast
 
 RESULT_SCHEMA = T.StructType([
     T.StructField("check_name", T.StringType(), False),
@@ -225,56 +225,23 @@ def quarantine(df: DataFrame, checks: list[Check]
     return clean, bad
 
 
-def _session_broadcast_cap(df: DataFrame) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (-1 = disabled).
-    Spark accepts bare bytes or k/m/g[b] suffixes; parse both so the
-    size-checked default below respects whatever budget the session set."""
-    raw = str(df.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760")).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("k", 1 << 10),
-                      ("mb", 1 << 20), ("m", 1 << 20),
-                      ("gb", 1 << 30), ("g", 1 << 30),
-                      ("tb", 1 << 40), ("t", 1 << 40),
-                      ("pb", 1 << 50), ("p", 1 << 50),
-                      ("b", 1)):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        # Fail loudly (ADVICE r10): the conf always carries a value here,
-        # so a parse miss means a format this parser doesn't know — and
-        # silently substituting Spark's global 10MB would shrink a session
-        # whose builder set a larger budget (this repo's get_spark: 64MB).
-        raise ValueError(
-            "unparsable spark.sql.autoBroadcastJoinThreshold value "
-            f"{raw!r}; extend _session_broadcast_cap's suffix table")
-
-
 def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
-             ref_column: str, broadcast_ref: bool | None = None) -> DataFrame:
+             ref_column: str) -> DataFrame:
     """Fact rows whose key is absent from the reference side (the plan
     behind :func:`check_relationships`; split out so tests can assert the
     anti-join shape).
 
-    ``broadcast_ref=None`` (the default) is SIZE-CHECKED (VERDICT r9 #3):
-    hint only when Catalyst's estimate of the PRE-distinct reference is
-    within the session broadcast budget — a safe upper bound for the
-    post-distinct key set the join actually broadcasts. The r8/r9 sf8.0
-    probes proved the unconditional hint is a deferred OOM: an
-    ``F.broadcast`` bypasses the size check, so a caller checking
-    fact↔fact RI at 100 TB with the old default crashed only once the
-    reference outgrew the heap. Explicit True forces the hint (caller
-    asserts boundedness); explicit False keeps the shuffled anti-join
-    (ADVICE r5) — the graceful path for known-fact-sized references."""
+    SIZE-CHECKED (VERDICT r9 #3): hint only when
+    :func:`tables.fits_broadcast` says the PRE-distinct reference fits the
+    session broadcast budget — a safe upper bound for the post-distinct
+    key set the join actually broadcasts. An unknown size takes the
+    shuffled anti-join (the graceful path for fact-sized references,
+    ADVICE r5), which AQE can still turn into a broadcast at runtime. The
+    r8/r9 sf8.0 probes proved an unconditional hint is a deferred OOM:
+    ``F.broadcast`` bypasses the size check, so checking fact↔fact RI at
+    100 TB would crash only once the reference outgrew the heap."""
     keys = ref_df.select(F.col(ref_column).alias(column)).distinct()
-    if broadcast_ref is None:
-        cap = _session_broadcast_cap(ref_df)
-        est = _estimated_bytes(ref_df)
-        broadcast_ref = cap > 0 and est is not None and est <= cap
-    if broadcast_ref:
+    if fits_broadcast(ref_df):
         keys = F.broadcast(keys)
     return (
         df.filter(F.col(column).isNotNull())
@@ -284,23 +251,17 @@ def _orphans(df: DataFrame, column: str, ref_df: DataFrame,
 
 def check_relationships(df: DataFrame, column: str, ref_df: DataFrame,
                         ref_column: str,
-                        table_name: str | None = None,
-                        broadcast_ref: bool | None = None) -> CheckResult:
+                        table_name: str | None = None) -> CheckResult:
     """Referential integrity via LEFT ANTI join
-    (`data_quality_checks.py:67-79`). One job; by default the reference
-    side is broadcast only when Catalyst's size estimate fits the session
+    (`data_quality_checks.py:67-79`). One job; the reference side is
+    broadcast only when Catalyst's size estimate fits the session
     broadcast budget (see :func:`_orphans` — the post-distinct key set is
     opaque to the auto-broadcast estimator, so the pre-distinct estimate
-    is used as a safe upper bound). Pass ``broadcast_ref=True`` to force
-    the hint for a reference the caller KNOWS is dimension-sized despite
-    a pessimistic estimate, or ``broadcast_ref=False`` to force the
-    shuffled anti-join (e.g. RI against another fact table, where a
-    forced broadcast would collect the reference to the driver). NULL
-    fact keys are excluded (dbt relationships-test semantics; the
-    reference's raw left_anti would count them as orphans, but it pairs
-    the check with check_not_null on key columns)."""
-    n = _orphans(df, column, ref_df, ref_column,
-                 broadcast_ref=broadcast_ref).count()
+    is used as a safe upper bound). NULL fact keys are excluded (dbt
+    relationships-test semantics; the reference's raw left_anti would
+    count them as orphans, but it pairs the check with check_not_null on
+    key columns)."""
+    n = _orphans(df, column, ref_df, ref_column).count()
     return CheckResult(
         check_name=f"relationships_{column}", table_name=table_name,
         column_name=column, passed=n == 0, failed_count=n, total_count=None,

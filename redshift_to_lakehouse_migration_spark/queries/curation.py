@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bind
-from ..llm.bloom import bloom_filter_grams, build_gram_bloom, with_bloom_bits
 from ..llm.dedup import norm_text
 from ..tables import SPREAD_TEXT_MIN_BYTES_PER_CORE, load, spread
 
@@ -64,8 +63,7 @@ def _gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def contamination_check(spark: SparkSession, sf_dir: str,
-                        bloom_fpp: float | None = None) -> DataFrame:
+def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document benchmark contamination: distinct grams, grams shared
     with the benchmark set, and the contaminated flag.
 
@@ -74,24 +72,7 @@ def contamination_check(spark: SparkSession, sf_dir: str,
     benchmark gram join (benchmark side broadcast — eval sets are tiny
     next to the corpus), aggregated once by doc_id. The corpus text is
     scanned twice (totals + hits), which at 100 TB beats shuffling an
-    exploded gram stream three times.
-
-    ``bloom_fpp``: optionally pre-filter each corpus gram ARRAY before
-    the explode with a broadcast Bloom filter over the benchmark grams
-    (recall-preserving, hence result-identical; llm/bloom.py,
-    tests/test_bloom.py). Default OFF — measured at sf0.1 AND sf1.0,
-    the filter is neutral-to-negative here (r6: 2.9s vs 1.9s at sf0.1,
-    7.5s vs 7.6s at sf1.0) because this corpus's benchmark gram set is
-    tiny (31-word vocabulary -> ~29k distinct grams at sf1.0) and the
-    broadcast hash join already drops non-matching grams map-side at
-    about the cost of a bloom probe, while the build adds ~1s of fixed
-    bench-side work. The filter's real regime is a decontamination
-    list too large to broadcast (~>100 MB hash table: full benchmark
-    suites + web-overlap lists at 100 TB) where the exact join
-    degrades to shuffling every exploded corpus gram; the bloom bits
-    stay ~30x smaller than the list and keep the join input to
-    candidates only — measured 2.1x on a 2M-gram list vs 40M corpus
-    gram rows (r6, numbers in CHANGES_r6.md)."""
+    exploded gram stream three times."""
     # The gram table is consumed THREE times (benchmark branch + hits
     # explode + totals), so without the checkpoint the scan→normalize→
     # split→sliding-window subtree runs ~2x over the full corpus per
@@ -107,19 +88,8 @@ def contamination_check(spark: SparkSession, sf_dir: str,
     bench_grams = (base.filter(is_bench)
                    .select(F.explode("grams").alias("gram")).distinct())
     corpus = base.filter(~is_bench)
-    hits_src, grams_col = corpus, F.col("grams")
-    if bloom_fpp is not None:
-        # Materialize the (small) benchmark gram set ONCE: the bloom
-        # build's two actions and the exact join all read the compact
-        # checkpoint instead of re-deriving grams from the corpus scan
-        # 3x (measured: the recomputation, not the explode, was the
-        # bloom path's overhead at bench scale).
-        bench_grams = bench_grams.localCheckpoint(eager=True)
-        bloom = build_gram_bloom(bench_grams, fpp=bloom_fpp)
-        hits_src = with_bloom_bits(corpus, spark, bloom)
-        grams_col = bloom_filter_grams(grams_col, bloom)
     hits = (
-        hits_src.select("doc_id", F.explode(grams_col).alias("gram"))
+        corpus.select("doc_id", F.explode("grams").alias("gram"))
         .join(F.broadcast(bench_grams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").alias("shared_grams"))

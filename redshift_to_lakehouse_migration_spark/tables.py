@@ -76,13 +76,31 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for ``df``'s optimized plan —
     driver-side metadata only (file bytes for parquet scans), no job.
     None when unavailable. The one estimate every size gate reads:
-    :func:`spread`'s floor, ``quality._orphans``' broadcast check, the
-    medallion silver pin and the ``fact_claims`` layout chooser."""
+    :func:`spread`'s floor and, through :func:`fits_broadcast`, every
+    broadcast-budget gate."""
     try:
         return int(str(df._jdf.queryExecution()
                        .optimizedPlan().stats().sizeInBytes()))
     except Exception:
         return None
+
+
+def fits_broadcast(df: DataFrame) -> bool | None:
+    """Whether ``df``'s size estimate fits the session broadcast budget
+    (``spark.sql.autoBroadcastJoinThreshold`` as Spark itself parsed it;
+    a budget <= 0 disables broadcasting, so nothing fits). None when the
+    estimate or the budget is unavailable — each gate decides what an
+    unknown size means: ``quality._orphans`` and the medallion silver pin
+    treat it as "does not fit", the ``fact_claims`` chooser as "fits"."""
+    est = _estimated_bytes(df)
+    if est is None:
+        return None
+    try:
+        cap = int(df.sparkSession._jsparkSession.sessionState().conf()
+                  .autoBroadcastJoinThreshold())
+    except Exception:
+        return None
+    return cap > 0 and est <= cap
 
 
 def spread(df: DataFrame, spark: SparkSession,

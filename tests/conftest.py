@@ -9,8 +9,8 @@ from pyspark.sql import SparkSession
 
 from redshift_to_lakehouse_migration_spark.session import get_spark
 
-# Smallest driver-generated scale factor; the bloom-identity tests read the
-# real documents/embeddings parquet rather than synthesizing rows.
+# Smallest driver-generated scale factor: the one smoke-data path every
+# test module reads (through the ``sf_dir`` fixture or by import).
 SF_SMOKE = "/root/testdata/sf0.001"
 
 

@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.llm import pipeline as P
 from redshift_to_lakehouse_migration_spark.tables import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 @pytest.fixture(scope="module")
@@ -68,3 +67,23 @@ def test_runner_materializes_and_reads_shingle_blocks(spark, docs,
         ._jdf.queryExecution().executedPlan().toString()
     assert "shingle_blocks" in plan        # reads the signature parquet
     assert "documents" not in plan         # never rescans the corpus
+
+
+def test_decontaminate_drops_exactly_the_contaminated_docs(spark, docs):
+    """The corpus-prep stage and the ``contamination_check`` query apply
+    one rule: among non-benchmark canonical docs, the stage drops exactly
+    those the query flags — and at this SF the query flags some, so the
+    agreement is not vacuous."""
+    from redshift_to_lakehouse_migration_spark.queries.curation import (
+        BENCH_MOD, contamination_check)
+    raw = P.stage_raw(docs)
+    canon = P.stage_exact_dedup(P.stage_gate(raw))
+    corpus = {r.doc_id for r in canon.select("doc_id").collect()
+              if r.doc_id % BENCH_MOD != 0}
+    kept = {r.doc_id for r in
+            P.stage_decontaminate(canon, raw).select("doc_id").collect()}
+    flagged = {r.doc_id for r in contamination_check(spark, SF).collect()
+               if r.contaminated}
+    assert flagged & corpus
+    assert kept <= corpus
+    assert corpus - kept == flagged & corpus

@@ -14,8 +14,7 @@ import pytest
 
 from redshift_to_lakehouse_migration_spark.queries import QUERIES
 from redshift_to_lakehouse_migration_spark.tables import TABLES, load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 @pytest.fixture(scope="module")

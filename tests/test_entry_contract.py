@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 import __spark_entry__ as entrymod
+from tests.conftest import SF_SMOKE
 
 
 def test_entry_runs_and_returns_rows(spark):
@@ -41,6 +42,6 @@ def test_registry_contract(spark):
     assert len(qs) >= 96
     # every query builds a plan against the smallest SF without erroring
     for name, fn in qs.items():
-        df = fn(spark, "/root/testdata/sf0.001")
+        df = fn(spark, SF_SMOKE)
         assert isinstance(df, DataFrame), name
         assert len(df.columns) == len(set(df.columns)), name

@@ -4,6 +4,7 @@ assertions on each normalizer (`tests/test_silver_transforms.py:14-88`)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.functions import (
@@ -81,11 +82,12 @@ def test_spread_parallelizes_small_scans_only(spark, tmp_path):
     """spread(): single-partition inputs fan out to defaultParallelism;
     inputs already at/above it pass through unchanged (the cluster-scale
     no-op contract from SCALE.md). On a parquet scan the byte floor
-    reads Catalyst's size estimate through the private ``_jdf`` path —
-    if a Spark upgrade breaks it, the estimate turns None and every
-    size gate silently takes its fallback branch; fail here instead."""
+    reads Catalyst's size estimate through the private ``_jdf`` path,
+    and ``fits_broadcast`` reads the budget Spark itself parsed through
+    ``_jsparkSession`` — if a Spark upgrade breaks either, every size
+    gate silently takes its unknown-size branch; fail here instead."""
     from redshift_to_lakehouse_migration_spark.tables import (
-        _estimated_bytes, spread)
+        _estimated_bytes, fits_broadcast, spread)
     target = spark.sparkContext.defaultParallelism
     small = spark.range(100).coalesce(1)
     assert small.rdd.getNumPartitions() == 1
@@ -95,7 +97,7 @@ def test_spread_parallelizes_small_scans_only(spark, tmp_path):
     assert out.rdd.getNumPartitions() == target + 4
     assert out is big  # no extra shuffle inserted
 
-    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "t"))
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "t"))
     scan = spark.read.parquet(str(tmp_path / "t"))
     assert scan.rdd.getNumPartitions() == 1
     est = _estimated_bytes(scan)
@@ -103,6 +105,142 @@ def test_spread_parallelizes_small_scans_only(spark, tmp_path):
     assert spread(scan, spark, min_bytes_per_core=est) is scan
     assert spread(scan, spark, min_bytes_per_core=1) \
         .rdd.getNumPartitions() == target
+
+    assert fits_broadcast(scan) is True  # the session's 64 MB budget
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert fits_broadcast(scan) is False
+        # a suffixed budget is parsed by Spark, not by this package
+        assert est > 1024
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+        assert fits_broadcast(scan) is False
+    finally:
+        # set, not unset: unset falls back to Spark's global 10MB default
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+
+@pytest.mark.parametrize("budget,fits", [
+    ("64MB", True), ("64m", True), ("512kb", True), ("1g", True),
+    ("10485760", True), ("0", False)])
+def test_fits_broadcast_reads_spark_parsed_budget(spark, tmp_path,
+                                                  budget, fits):
+    """Every byte-string form Spark accepts for the budget reaches the
+    predicate already parsed (bare bytes and k/m/g[b] suffixes); a zero
+    budget, like -1, lets nothing fit."""
+    from redshift_to_lakehouse_migration_spark.tables import fits_broadcast
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget)
+        assert fits_broadcast(scan) is fits
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+def test_fits_broadcast_budget_is_inclusive(spark, tmp_path):
+    """An estimate exactly at the budget fits and one byte over does not
+    — the same ``sizeInBytes <= threshold`` rule Spark's own
+    auto-broadcast applies, so a gate never disagrees with the planner
+    at the edge."""
+    from redshift_to_lakehouse_migration_spark.tables import (
+        _estimated_bytes, fits_broadcast)
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+    est = _estimated_bytes(scan)
+    assert est is not None and est > 1
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(est))
+        assert fits_broadcast(scan) is True
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(est - 1))
+        assert fits_broadcast(scan) is False
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+def test_fits_broadcast_unknown_without_session_budget(monkeypatch):
+    """A known estimate with no readable session budget is still unknown
+    (None), never a guessed default budget."""
+    from redshift_to_lakehouse_migration_spark import tables
+
+    class _NoSession:
+        sparkSession = object()  # no _jsparkSession handle
+
+    monkeypatch.setattr(tables, "_estimated_bytes", lambda df: 10)
+    assert tables.fits_broadcast(_NoSession()) is None
+
+
+def test_pin_if_small_follows_the_budget(spark, tmp_path):
+    """The medallion silver pin checkpoints an output that fits the
+    budget and passes one that does not through untouched; the pinned
+    frame keeps its origin size estimate for downstream choosers."""
+    from redshift_to_lakehouse_migration_spark.medallion.flow import (
+        _pin_if_small)
+    from redshift_to_lakehouse_migration_spark.tables import (
+        _estimated_bytes)
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+
+    pinned = _pin_if_small(scan)
+    assert pinned is not scan
+    assert "LogicalRDD" in pinned._jdf.queryExecution().logical().toString()
+    assert _estimated_bytes(pinned) == _estimated_bytes(scan)
+    assert sorted(r.id for r in pinned.collect()) == list(range(1000))
+
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert _pin_if_small(scan) is scan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+def test_broadcast_gates_keep_their_unknown_size_branch(
+        spark, tmp_path, monkeypatch):
+    """With the size estimate unavailable, each broadcast-budget gate
+    takes its documented branch: the RI check adds no broadcast hint,
+    the medallion silver pin returns its input, and the fact_claims
+    chooser builds plain (no bucketed tables persisted)."""
+    from redshift_to_lakehouse_migration_spark import quality, tables
+    from redshift_to_lakehouse_migration_spark import schemas as S
+    from redshift_to_lakehouse_migration_spark.medallion import silver
+    from redshift_to_lakehouse_migration_spark.medallion.flow import (
+        _pin_if_small)
+    from redshift_to_lakehouse_migration_spark.medallion.gold import (
+        build_fact_claims_auto)
+
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "t"))
+    scan = spark.read.parquet(str(tmp_path / "t"))
+    monkeypatch.setattr(tables, "_estimated_bytes", lambda df: None)
+    assert tables.fits_broadcast(scan) is None
+
+    # a reference Spark itself would not auto-broadcast, so a
+    # BroadcastHashJoin could only come from the gate's hint
+    ref = spark.range(10 ** 12)
+    plan = (quality._orphans(scan, "id", ref, "id")
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "BroadcastHashJoin" not in plan and "LeftAnti" in plan
+
+    assert _pin_if_small(scan) is scan
+
+    def raw(schema, fn):
+        return fn(spark.createDataFrame([], schema))
+
+    try:
+        build_fact_claims_auto(
+            spark, raw(S.RAW_CLAIMS, silver.transform_claims),
+            raw(S.RAW_POLICIES, silver.transform_policies),
+            raw(S.RAW_PROPERTIES, silver.transform_properties),
+            n_buckets=4, table_prefix="test_auto_")
+        assert [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("test_auto_")] == []
+    finally:
+        spark.sql("DROP TABLE IF EXISTS test_auto_claims")
+        spark.sql("DROP TABLE IF EXISTS test_auto_policies")
 
 
 def test_tune_for_session_applies_runtime_confs(spark):

@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 from redshift_to_lakehouse_migration_spark.llm import kmeans as km
 from redshift_to_lakehouse_migration_spark.llm.similarity import ivf_assign
 from redshift_to_lakehouse_migration_spark.tables import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 @pytest.fixture(scope="module")

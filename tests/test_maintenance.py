@@ -10,8 +10,7 @@ from redshift_to_lakehouse_migration_spark.maintenance import (
     compact_parquet, write_bucketed,
 )
 from redshift_to_lakehouse_migration_spark.tables import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 def test_compaction_preserves_data(spark, tmp_path):

@@ -13,6 +13,7 @@ from redshift_to_lakehouse_migration_spark.medallion.flow import (
     build_medallion_pipeline,
 )
 from redshift_to_lakehouse_migration_spark.scd2 import scd2_merge
+from tests.conftest import SF_SMOKE
 
 AS_OF = "2024-06-01"
 
@@ -134,7 +135,7 @@ def test_jsonl_roundtrip_with_explicit_schema(spark, tmp_path):
     from redshift_to_lakehouse_migration_spark.medallion.bronze import read_jsonl, write_jsonl
     from redshift_to_lakehouse_migration_spark.tables import load
 
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
+    docs = load(spark, SF_SMOKE, "documents")
     path = str(tmp_path / "docs_jsonl")
     write_jsonl(docs, path)
 

@@ -15,8 +15,7 @@ from redshift_to_lakehouse_migration_spark.queries import QUERIES
 from redshift_to_lakehouse_migration_spark.queries.curation import (
     contamination_check)
 from redshift_to_lakehouse_migration_spark.tables import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 def _plan(spark, name: str) -> str:

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.llm import pq
 from redshift_to_lakehouse_migration_spark.tables import load
+from tests.conftest import SF_SMOKE as SF
 
-SF = "/root/testdata/sf0.001"
 M, DIM = 4, 64
 
 

@@ -130,109 +130,65 @@ def test_composite_unique_no_encoding_collisions(spark):
     assert not r2.passed and r2.failed_count == 1
 
 
-def test_relationships_forced_broadcast_still_available(spark):
-    """``broadcast_ref=True`` must still force the hint for a caller that
-    KNOWS the reference is dimension-sized despite a pessimistic estimate
-    (a post-distinct key set the estimator can't see)."""
-    child = spark.createDataFrame([("C1", "P1")],
-                                  "claim_id string, policy_id string")
-    parent = spark.createDataFrame([("P1",)], "policy_id string")
-    _saved_abjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:  # -1 disables AUTO broadcast: only the explicit hint can produce it
-        orphans = q._orphans(child, "policy_id", parent, "policy_id",
-                             broadcast_ref=True)
-        plan = orphans._jdf.queryExecution().executedPlan().toString()
-    finally:
-        # set, not unset: unset falls back to Spark's global 10MB
-        # default rather than the session's 64MB builder conf, which
-        # silently degraded every later test's broadcast planning
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _saved_abjt)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
 def test_relationships_default_is_size_checked(spark, sf_dir):
-    """VERDICT r9 #3: the DEFAULT may no longer hint unconditionally —
+    """VERDICT r9 #3: the RI check may not hint unconditionally —
     ``F.broadcast`` bypasses the size check, so the old default deferred
     an OOM to whenever a caller checked fact↔fact RI at scale. With the
     session broadcast budget exhausted (threshold -1), a corpus-table
-    reference under default args must produce a plan with NO broadcast
-    hint (the shuffled anti-join is the graceful path); with a healthy
-    budget and a measured-tiny reference, the hint fires and the plan
-    audit SEES it (the invariant now covers the quality entry point)."""
+    reference must produce a plan with NO broadcast hint (the shuffled
+    anti-join is the graceful path) and still the right result; with a
+    healthy budget and a measured-tiny reference, the hint fires and the
+    plan audit SEES it (the invariant now covers the quality entry
+    point)."""
     from redshift_to_lakehouse_migration_spark.tables import load
     from tools.plan_audit import broadcast_hint_corpus_scans
 
     orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
+    facts = load(spark, sf_dir, "lineitem").withColumnRenamed(
+        "l_orderkey", "o_orderkey")
 
     _saved_abjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        orphans = q._orphans(lineitem.withColumnRenamed(
-            "l_orderkey", "o_orderkey"), "o_orderkey", orders, "o_orderkey")
+        orphans = q._orphans(facts, "o_orderkey", orders, "o_orderkey")
         # size-checked default under a zero budget: no hint anywhere
         assert broadcast_hint_corpus_scans(orphans) == []
         plan = orphans._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan and "LeftAnti" in plan
+        # the shuffled anti-join still gives the right (empty) orphan set
+        assert orphans.count() == 0
+        assert q.check_relationships(facts, "o_orderkey", orders,
+                                     "o_orderkey").passed
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _saved_abjt)
 
     # healthy budget + measured-tiny reference: the hint fires, and the
     # audit walker reports the hinted corpus scan (declared-by-measurement)
-    orphans = q._orphans(lineitem.withColumnRenamed(
-        "l_orderkey", "o_orderkey"), "o_orderkey", orders, "o_orderkey")
+    orphans = q._orphans(facts, "o_orderkey", orders, "o_orderkey")
     assert broadcast_hint_corpus_scans(orphans) == [["orders"]]
 
 
-def test_broadcast_cap_parser_raises_on_unknown_format():
-    """ADVICE r10: an unparsable threshold must fail LOUDLY, not silently
-    substitute Spark's global 10MB — the session builder sets 64MB here,
-    so the silent fallback would shrink the broadcast budget by 6.4x.
-    Known formats still parse (bare bytes, k/m/g[b] suffixes, -1). Fed
-    through a stub session because Spark's own conf.set validates values,
-    so the raise path is only reachable via a format Spark knows and this
-    parser doesn't — exactly the gap the raise is meant to expose."""
-    import pytest as _pytest
+def test_relationships_over_budget_ref_is_not_hinted(spark, sf_dir):
+    """A reference whose estimate exceeds a live (non-disabled) budget
+    gets no broadcast hint: under a 1k budget the corpus ``orders`` scan
+    is over it, so the anti-join stays shuffled — Spark would not
+    auto-broadcast it either — and the orphan set is still right."""
+    from redshift_to_lakehouse_migration_spark.tables import (
+        _estimated_bytes, load)
+    from tools.plan_audit import broadcast_hint_corpus_scans
 
-    class _Stub:
-        def __init__(self, v):
-            self.sparkSession = self
-            self.conf = self
-            self._v = v
+    orders = load(spark, sf_dir, "orders")
+    facts = load(spark, sf_dir, "lineitem").withColumnRenamed(
+        "l_orderkey", "o_orderkey")
+    assert _estimated_bytes(orders) > 1024
 
-        def get(self, key, default=None):
-            return self._v
-
-    for raw, want in (("-1", -1), ("10485760", 10485760),
-                      ("64MB", 64 << 20), ("64m", 64 << 20),
-                      ("1g", 1 << 30), ("512kb", 512 << 10)):
-        assert q._session_broadcast_cap(_Stub(raw)) == want, raw
-    with _pytest.raises(ValueError, match="unparsable"):
-        q._session_broadcast_cap(_Stub("64MiB"))
-
-
-def test_relationships_shuffled_fallback_for_big_refs(spark):
-    """broadcast_ref=False keeps the shuffled anti-join — the graceful
-    path when the reference is NOT dimension-sized (ADVICE r5: a forced
-    broadcast of a fact-sized ref collects it to the driver)."""
-    child = spark.createDataFrame([("C1", "P1")],
-                                  "claim_id string, policy_id string")
-    parent = spark.createDataFrame([("P1",)], "policy_id string")
     _saved_abjt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
     try:
-        orphans = q._orphans(child, "policy_id", parent, "policy_id",
-                             broadcast_ref=False)
+        orphans = q._orphans(facts, "o_orderkey", orders, "o_orderkey")
+        assert broadcast_hint_corpus_scans(orphans) == []
         plan = orphans._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan and "LeftAnti" in plan
+        assert orphans.count() == 0
     finally:
-        # set, not unset: unset falls back to Spark's global 10MB
-        # default rather than the session's 64MB builder conf, which
-        # silently degraded every later test's broadcast planning
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _saved_abjt)
-    assert "BroadcastHashJoin" not in plan and "LeftAnti" in plan
-    # and the result is the same empty orphan set
-    assert orphans.count() == 0
-    r = q.check_relationships(child, "policy_id", parent, "policy_id",
-                              broadcast_ref=False)
-    assert r.passed

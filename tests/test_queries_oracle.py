@@ -15,8 +15,8 @@ import duckdb
 import pytest
 
 from redshift_to_lakehouse_migration_spark.queries import ORACLES, QUERIES
+from tests.conftest import SF_SMOKE as SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 

@@ -12,8 +12,7 @@ from redshift_to_lakehouse_migration_spark import datagen
 from redshift_to_lakehouse_migration_spark import schemas as S
 from redshift_to_lakehouse_migration_spark.streaming import ingest, windows
 from redshift_to_lakehouse_migration_spark.tables import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 def test_ingest_stream_exactly_once(spark, tmp_path):

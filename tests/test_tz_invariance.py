@@ -31,8 +31,7 @@ from datetime import datetime
 import pytest
 
 from redshift_to_lakehouse_migration_spark.queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 
 @contextmanager
