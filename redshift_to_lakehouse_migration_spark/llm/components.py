@@ -15,7 +15,7 @@ node, the aggregate shuffles one row per node; `localCheckpoint` after
 each round keeps lineage flat so 10 rounds cost 10× one round, not 2^10.
 (localCheckpoint blocks are NOT replicated — an executor loss mid-
 propagation fails the job instead of recomputing, the same trade
-documented on `capped_band_candidates`; on a fault-prone cluster switch
+documented on `dedup.minhash_lsh_pairs`; on a fault-prone cluster switch
 to `checkpoint()` with a checkpoint dir for replicated durability.)
 The convergence probe is an ``Observation`` metric riding the one noop
 action that materializes each round's labels — a driver scalar, not a

@@ -180,7 +180,7 @@ def jaccard_pairs(sh: DataFrame, blocks: DataFrame, threshold: float,
     scan→normalize→shingle→window subtree runs 3-4× per action (measured
     at sf0.1: 1.60 s → 1.34 s median with the checkpoint; plan Exchanges
     42 → 15). Same non-replicated-block caveat as
-    :func:`capped_band_candidates`."""
+    :func:`minhash_lsh_pairs`."""
     capped = capped_shingle_blocks(sh, blocks, shingle_df_cap) \
         .localCheckpoint(eager=False)
     return jaccard_pairs_from_capped(capped, threshold)
@@ -222,8 +222,7 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
                            payload: tuple[str, ...] = (),
                            group_col: str | None = None,
                            distinct: bool = True,
-                           broadcast_sizes: bool = False,
-                           materialize: bool = True) -> DataFrame:
+                           broadcast_sizes: bool = False) -> DataFrame:
     """Candidate pairs from a banded signature table, with bounded
     per-bucket fan-out. ``bands``: (doc_id, band_id, band_key, *payload).
 
@@ -274,29 +273,20 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
     annotation join (no shuffle of the band table) — correct ONLY when the
     key space is bounded (sign-LSH: ≤ 2^planes buckets); MinHash band keys
     scale with the corpus and must keep the shuffle join.
-    ``materialize=False`` skips the band-table localCheckpoint — right when
-    the upstream subtree is a cheap projection or already a parquet scan
-    (re-reading compact files beats holding checkpoint blocks); keep the
-    default for expensive signatures (MinHash wide min-agg), which
-    otherwise recompute per plan branch. Caveat of the default:
-    localCheckpoint blocks are NOT replicated, so losing an executor
-    mid-job fails the job (it restarts from the source) instead of
-    recomputing the lost blocks — parquet-backed inputs with
-    ``materialize=False`` avoid that failure mode entirely.
+
+    The plan reads ``bands`` from 2 (uncapped) or 3+ (capped) branches, so
+    it is the CALLER that decides whether to checkpoint it: the producers
+    of expensive band tables (:func:`minhash_lsh_pairs`,
+    :func:`simhash_near_pairs`, the capped embedding path) do, while a
+    parquet scan (:func:`minhash_pairs_from_tables`) is passed as is.
     """
     keys = ["band_id", "band_key"]
-    if materialize:
-        # The band table feeds 3+ plan branches (size aggregate, both
-        # sides of the small self-join, the oversized side); materialize
-        # it ONCE to executor-local storage so branches read cached blocks
-        # instead of recomputing signatures per branch — the in-plan
-        # equivalent of `materialize_minhash`'s parquet table.
-        bands = bands.localCheckpoint(eager=False)
-    if bucket_cap is None:
-        # Uncapped: the self-join IS the candidate set. No size table,
-        # no annotation join, no (empty) oversized branches to plan.
-        cand = (
-            bands.alias("x").join(
+
+    def pairs_with(left: DataFrame) -> DataFrame:
+        """All-pairs band-key self-join of ``left`` (x) against the raw
+        ``bands`` (y), lower doc id on the x side."""
+        return (
+            left.alias("x").join(
                 bands.alias("y"),
                 (F.col("x.band_id") == F.col("y.band_id"))
                 & (F.col("x.band_key") == F.col("y.band_key"))
@@ -306,6 +296,11 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
                     *[F.col(f"x.{c}").alias(f"{c}_1") for c in payload],
                     *[F.col(f"y.{c}").alias(f"{c}_2") for c in payload])
         )
+
+    if bucket_cap is None:
+        # Uncapped: the self-join IS the candidate set. No size table,
+        # no annotation join, no (empty) oversized branches to plan.
+        cand = pairs_with(bands)
         return cand.distinct() if distinct else cand
     slim_cols = ["doc_id", *keys] + (
         [group_col] if group_col and group_col not in keys else [])
@@ -320,17 +315,7 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
     # The y side stays UNFILTERED raw bands: both members of a candidate
     # pair share a bucket, so the x-side size filter already decides the
     # pair — one fewer size-join branch in the plan.
-    cand_small = (
-        small.alias("x").join(
-            bands.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .select(F.col("x.doc_id").alias("doc_id_1"),
-                F.col("y.doc_id").alias("doc_id_2"),
-                *[F.col(f"x.{c}").alias(f"{c}_1") for c in payload],
-                *[F.col(f"y.{c}").alias(f"{c}_2") for c in payload])
-    )
+    cand_small = pairs_with(small)
     big = ann.filter(F.col("__bn") > bucket_cap)
 
     def rep_payload(rows: DataFrame, extra_keys: list[str]) -> DataFrame:
@@ -339,17 +324,19 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
             *keys, *extra_keys,
             *[F.col(c).alias(f"{c}_1") for c in payload])
 
+    def star(rows: DataFrame, rep_id: str) -> DataFrame:
+        """Star edges (``rep_id`` → member) with the representative's
+        payload already joined on as the ``_1`` side."""
+        return rows.select(F.col(rep_id).alias("doc_id_1"),
+                           F.col("doc_id").alias("doc_id_2"),
+                           *[f"{c}_1" for c in payload],
+                           *[F.col(c).alias(f"{c}_2") for c in payload])
+
     if group_col is None:
         reps = rep_payload(big.filter(F.col("doc_id") == F.col("__rep_id")),
                            [])
-        cand_big = (
-            big.filter(F.col("doc_id") > F.col("__rep_id"))
-            .join(reps, keys)
-            .select(F.col("__rep_id").alias("doc_id_1"),
-                    F.col("doc_id").alias("doc_id_2"),
-                    *[f"{c}_1" for c in payload],
-                    *[F.col(c).alias(f"{c}_2") for c in payload])
-        )
+        cand_big = star(big.filter(F.col("doc_id") > F.col("__rep_id"))
+                        .join(reps, keys), "__rep_id")
     else:
         # Per-group representative ids — again ids only, and only for
         # oversized buckets (an empty aggregate in the common case).
@@ -359,25 +346,15 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
                   .agg(F.min("doc_id").alias("__grep_id")))
         bigg = big.join(gsizes, [*keys, group_col])
         grep_rows = bigg.filter(F.col("doc_id") == F.col("__grep_id"))
-        members = (
+        members = star(
             bigg.filter(F.col("doc_id") > F.col("__grep_id"))
             .join(rep_payload(grep_rows, [group_col]),
-                  [*keys, group_col])
-            .select(F.col("__grep_id").alias("doc_id_1"),
-                    F.col("doc_id").alias("doc_id_2"),
-                    *[f"{c}_1" for c in payload],
-                    *[F.col(c).alias(f"{c}_2") for c in payload])
-        )
-        group_reps = (
+                  [*keys, group_col]), "__grep_id")
+        group_reps = star(
             grep_rows.filter(F.col("doc_id") > F.col("__rep_id"))
             .join(rep_payload(big.filter(F.col("doc_id")
                                          == F.col("__rep_id")), []),
-                  keys)
-            .select(F.col("__rep_id").alias("doc_id_1"),
-                    F.col("doc_id").alias("doc_id_2"),
-                    *[f"{c}_1" for c in payload],
-                    *[F.col(c).alias(f"{c}_2") for c in payload])
-        )
+                  keys), "__rep_id")
         cand_big = members.unionByName(group_reps)
     cand = cand_small.unionByName(cand_big)
     return cand.distinct() if distinct else cand
@@ -385,16 +362,16 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
 
 def _lsh_candidate_verify(sh: DataFrame, bands: DataFrame, threshold: float,
                           bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-                          materialize: bool = True) -> DataFrame:
+                          ) -> DataFrame:
     """Shared LSH tail: banded candidate self-join (bucket-capped) →
     exact-Jaccard verify restricted to candidates. ``sh``:
-    (doc_id, shingle); ``bands``: (doc_id, band_id, band_key[, sig_hash]).
-    sig_hash (absent in band tables materialized before it existed) turns
-    oversized-bucket stars into per-signature-group stars.
-    ``materialize=False`` when ``bands`` is already parquet-backed."""
+    (doc_id, shingle); ``bands``: (doc_id, band_id, band_key[, sig_hash]),
+    checkpointed or parquet-backed by the caller (see
+    :func:`capped_band_candidates`). sig_hash (absent in band tables
+    materialized before it existed) turns oversized-bucket stars into
+    per-signature-group stars."""
     group = "sig_hash" if "sig_hash" in bands.columns else None
-    cand = capped_band_candidates(bands, bucket_cap, group_col=group,
-                                  materialize=materialize)
+    cand = capped_band_candidates(bands, bucket_cap, group_col=group)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     shared = (
         cand.join(sh.alias("s1"), F.col("doc_id_1") == F.col("s1.doc_id"))
@@ -442,13 +419,21 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str, text_col: str,
     signature build — 4 evaluations of the scan→normalize→shingle
     explode per action without the checkpoint (re-measured r11: 2.36 s →
     2.23 s median at sf0.1, and the effect compounds at larger SFs where
-    the corpus re-scan dominates). The band table is checkpointed too
-    (inside :func:`capped_band_candidates`). At cluster scale, use
+    the corpus re-scan dominates). The band table is checkpointed too:
+    :func:`capped_band_candidates` reads it from 3+ plan branches (size
+    aggregate, both self-join sides, the oversized side), which would
+    otherwise each recompute the wide min-agg signatures.
+
+    Caveat of both checkpoints (and of every in-plan localCheckpoint in
+    this package): the blocks are NOT replicated, so losing an executor
+    mid-job fails the job (it restarts from the source) instead of
+    recomputing the lost blocks. At cluster scale, use
     :func:`materialize_minhash` + :func:`minhash_pairs_from_tables`
     instead — one corpus scan total, parquet-backed (replicated) tables."""
     sh = shingles(_normed_docs(docs, id_col, text_col), "doc_id", "norm",
                   k=k).localCheckpoint(eager=False)
-    bands = minhash_band_keys(sh, make_permutations(n_perm, seed), band_rows)
+    bands = minhash_band_keys(sh, make_permutations(n_perm, seed),
+                              band_rows).localCheckpoint(eager=False)
     return _lsh_candidate_verify(sh, bands, threshold)
 
 
@@ -478,13 +463,13 @@ def minhash_pairs_from_tables(spark, paths: dict[str, str],
     """Scale path, step 2: near-dup pairs from materialized signature
     tables — identical pair set to :func:`minhash_lsh_pairs` (asserted in
     test_dedup.py), but every consumer reads the compact parquet tables
-    instead of re-shingling the corpus. ``materialize=False``: the band
-    table is already a compact parquet scan, so a localCheckpoint would
-    only duplicate it into non-replicated executor storage (and an
+    instead of re-shingling the corpus. The band table is passed on
+    unchanged: it is already a compact parquet scan, so a localCheckpoint
+    would only duplicate it into non-replicated executor storage (and an
     executor loss would then fail the job instead of re-reading files)."""
     sh = spark.read.parquet(paths["shingles"])
     bands = spark.read.parquet(paths["bands"])
-    return _lsh_candidate_verify(sh, bands, threshold, materialize=False)
+    return _lsh_candidate_verify(sh, bands, threshold)
 
 
 def simhash_signatures(docs: DataFrame, id_col: str,
@@ -501,14 +486,9 @@ def simhash_signatures(docs: DataFrame, id_col: str,
     one shuffle (partial+final hash agg on doc_id); signatures are
     bit-identical to the exploding formulation (test_dedup.py asserts so).
     """
-    normed = (
-        docs.filter(F.col(text_col).isNotNull()
-                    & (F.col(text_col).rlike(r"\S")))
-        .select(F.col(id_col).alias("doc_id"),
-                norm_text(text_col).alias("norm"))
-    )
     toks = (
-        normed.select("doc_id", F.explode(F.split("norm", " ")).alias("tok"))
+        _normed_docs(docs, id_col, text_col)
+        .select("doc_id", F.explode(F.split("norm", " ")).alias("tok"))
         .withColumn(
             "h", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
                   .cast("long"))
@@ -554,7 +534,9 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3,
 
     Bands are unpivoted with ``stack`` so candidate generation is ONE
     equality self-join on (band_id, band_key) instead of per-band joins
-    unioned — one shuffle, and the signature input is scanned twice."""
+    unioned — one shuffle, and the signature input is scanned twice. The
+    stacked band table is checkpointed: the candidate plan reads it from
+    2+ branches (see :func:`capped_band_candidates`)."""
     n_bands = max_hamming + 1
     if not 1 <= n_bands <= 60:
         raise ValueError(f"max_hamming must be in [0, 59]: {max_hamming}")
@@ -567,7 +549,8 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3,
                      f"& {(1 << w) - 1} AS BIGINT)")
     bands = signatures.selectExpr(
         "doc_id", "simhash",
-        f"stack({n_bands}, {', '.join(parts)}) AS (band_id, band_key)")
+        f"stack({n_bands}, {', '.join(parts)}) AS (band_id, band_key)"
+    ).localCheckpoint(eager=False)
     cand = capped_band_candidates(bands, bucket_cap, payload=("simhash",),
                                   group_col="simhash")
     dist = F.bit_count(F.col("simhash_1").bitwiseXOR(F.col("simhash_2")))

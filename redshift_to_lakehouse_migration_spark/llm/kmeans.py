@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import ivf_assign
+from .similarity import dot, is_finite_vector, ivf_assign, norm
 
 
 def l2_normalize(vec: F.Column) -> F.Column:
@@ -36,9 +36,8 @@ def l2_normalize(vec: F.Column) -> F.Column:
     inside the division transform it would re-run the whole O(d) fold for
     every element — O(d²) per row on the corpus-wide normalize path."""
     from ..functions import bind
-    from .similarity import norm as _norm
     return bind(vec.cast("array<double>"), lambda v: bind(
-        _norm(v), lambda n: F.when(n == 0, v).otherwise(
+        norm(v), lambda n: F.when(n == 0, v).otherwise(
             F.transform(v, lambda x: x / n))))
 
 
@@ -95,7 +94,6 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
     slower on the whole fit at sf0.1). Index-time ASSIGNMENT of
     degenerate rows stays total anyway (`ivf_assign` gives every row a
     deterministic centroid) — only the fitted geometry ignores them."""
-    from .similarity import is_finite_vector
     centroids = init_centroids.select(
         F.col(init_centroids.columns[0]).alias("centroid_id"), "embedding")
     first = init_centroids.select(
@@ -127,10 +125,8 @@ def kmeans_objective(corpus: DataFrame, centroids: DataFrame) -> float:
                           "centroid_id", "embedding", nprobe=1)
     c = centroids.select(F.col("centroid_id"),
                          F.col("embedding").alias("__c_emb"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "__c_emb", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x)
-    dot = F.nanvl(dot, F.lit(None).cast("double"))
+    cos = F.nanvl(dot(F.col("embedding"), F.col("__c_emb")),
+                  F.lit(None).cast("double"))
     row = (assigned.join(F.broadcast(c), "centroid_id")
-           .agg(F.avg(dot).alias("obj")).collect()[0])
+           .agg(F.avg(cos).alias("obj")).collect()[0])
     return float("nan") if row.obj is None else float(row.obj)

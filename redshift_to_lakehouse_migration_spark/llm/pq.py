@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import (SIM_DIGITS, _top_k, cosine,
+                         is_finite_vector)
+
 
 def split_subvectors(vecs: DataFrame, id_col: str, vec_col: str,
                      m: int, dim: int) -> DataFrame:
@@ -131,7 +134,6 @@ def train_codebook(sub: DataFrame, init: DataFrame,
     codebook update can be poisoned, and post-aggregate the subvec is a
     concrete array, so the predicate evaluates once per row instead of
     inlining its fold into the slice expressions (see kmeans_fit)."""
-    from .similarity import is_finite_vector
     codebook = init
     for _ in range(iters):
         assigned = assign_codes(sub, codebook)
@@ -150,6 +152,34 @@ def encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
                 lambda s: s["code"]).alias("codes")))
 
 
+def _distance_table(probes_sub: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(query_id, subspace, code, dist): each probe subvector's squared L2
+    to every centroid of its subspace — M×K rows per probe."""
+    return (probes_sub.join(F.broadcast(codebook), "subspace")
+            .select(F.col("vec_id").alias("query_id"), "subspace", "code",
+                    F.round(_l2sq(F.col("subvec"), F.col("centroid")), 9)
+                    .alias("dist")))
+
+
+def _long_codes(codes: DataFrame) -> DataFrame:
+    """(neighbor_id, subspace, code): one row per corpus subspace code."""
+    return codes.select(F.col("vec_id").alias("neighbor_id"),
+                        F.posexplode("codes").alias("subspace", "code"))
+
+
+def _adc_rank(looked_up: DataFrame, k: int) -> DataFrame:
+    """Sum each (probe, candidate)'s table lookups into ``adc_dist`` and
+    keep the k smallest. A fully-degenerate probe (every subspace
+    distance NULL) sums to NULL, which sorts FIRST ascending — drop it
+    rather than let it fabricate rank 1; a partially-degenerate probe
+    ranks uniformly on its remaining finite subspaces (sum skips NULL)."""
+    return _top_k(
+        looked_up.groupBy("query_id", "neighbor_id")
+        .agg(F.round(F.sum("dist"), 6).alias("adc_dist"))
+        .filter(F.col("adc_dist").isNotNull()),
+        k, F.col("adc_dist"))
+
+
 def adc_topk_within_lists(codes: DataFrame, corpus_lists: DataFrame,
                           probes_sub: DataFrame, probe_lists: DataFrame,
                           codebook: DataFrame, k: int) -> DataFrame:
@@ -159,10 +189,6 @@ def adc_topk_within_lists(codes: DataFrame, corpus_lists: DataFrame,
     from the centroid-equality join (compute bound), distances from PQ
     codes (memory bound). Same shuffle keys as `similarity.ivf_topk`,
     but the corpus side ships M byte-codes instead of the raw vectors."""
-    dtable = (probes_sub.join(F.broadcast(codebook), "subspace")
-              .select(F.col("vec_id").alias("query_id"), "subspace", "code",
-                      F.round(_l2sq(F.col("subvec"), F.col("centroid")), 9)
-                      .alias("dist")))
     candidates = (
         probe_lists.select(F.col("vec_id").alias("query_id"),
                            "centroid_id")
@@ -171,31 +197,15 @@ def adc_topk_within_lists(codes: DataFrame, corpus_lists: DataFrame,
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id").distinct()
     )
-    long_codes = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.posexplode("codes").alias("subspace", "code"))
-    from pyspark.sql import Window as W
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("neighbor_id"))
-    return (
+    return _adc_rank(
         candidates
-        .join(long_codes, "neighbor_id")
-        .join(F.broadcast(dtable), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("dist"), 6).alias("adc_dist"))
-        # a fully-degenerate probe (every subspace distance NULL) sums to
-        # NULL, which sorts FIRST ascending — drop it rather than let it
-        # fabricate rank 1; a partially-degenerate probe ranks uniformly
-        # on its remaining finite subspaces (sum skips NULL).
-        .filter(F.col("adc_dist").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        .join(_long_codes(codes), "neighbor_id")
+        .join(F.broadcast(_distance_table(probes_sub, codebook)),
+              ["query_id", "subspace", "code"]), k)
 
 
 def refine_topk(candidates: DataFrame, corpus: DataFrame, probes: DataFrame,
-                id_col: str, vec_col: str, k: int,
-                round_digits: int | None = 9) -> DataFrame:
+                id_col: str, vec_col: str, k: int) -> DataFrame:
     """Exact re-rank of ADC candidates — the standard IVF-PQ refine stage:
     the code-only ADC pass over-fetches candidates (k·factor), then ONLY
     those rows join back their full-precision vectors for an exact cosine
@@ -208,32 +218,23 @@ def refine_topk(candidates: DataFrame, corpus: DataFrame, probes: DataFrame,
     ``candidates``: (query_id, neighbor_id[, ...]) from `adc_topk` /
     `adc_topk_within_lists` called with k·factor.
     """
-    from pyspark.sql import Window as W
     cvec = corpus.select(F.col(id_col).alias("neighbor_id"),
                          F.col(vec_col).alias("__n_emb"))
     pvec = probes.select(F.col(id_col).alias("query_id"),
                          F.col(vec_col).alias("__q_emb"))
-
     # the ONE canonical cosine (similarity.cosine): the fold order is
     # pinned for oracle parity, so it must not fork per module — and the
     # zero-norm/NaN totality guard must hold here exactly as in the
     # bucket/IVF paths (a hostile full-precision vector reaches this
     # re-rank via its quantized code).
-    from .similarity import cosine as _cosine
-    sim = _cosine(F.col("__q_emb"), F.col("__n_emb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    sim = F.round(cosine(F.col("__q_emb"), F.col("__n_emb")), SIM_DIGITS)
+    return _top_k(
         candidates.select("query_id", "neighbor_id")
         .join(cvec, "neighbor_id")
         .join(F.broadcast(pvec), "query_id")
         .select("query_id", "neighbor_id", sim.alias("sim"))
-        .filter(F.col("sim").isNotNull())  # undefined sim → no candidate
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        .filter(F.col("sim").isNotNull()),  # undefined sim → no candidate
+        k, F.col("sim").desc())
 
 
 def adc_topk(codes: DataFrame, probes_sub: DataFrame,
@@ -244,22 +245,8 @@ def adc_topk(codes: DataFrame, probes_sub: DataFrame,
     Plan: codes explode to (vec_id, subspace, code) → equality join with
     the table → one hash aggregate per (probe, candidate) → rank-k window.
     The corpus side never carries floats wider than one distance."""
-    dtable = (probes_sub.join(F.broadcast(codebook), "subspace")
-              .select(F.col("vec_id").alias("query_id"), "subspace", "code",
-                      F.round(_l2sq(F.col("subvec"), F.col("centroid")), 9)
-                      .alias("dist")))
-    long_codes = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.posexplode("codes").alias("subspace", "code"))
-    from pyspark.sql import Window as W
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("neighbor_id"))
-    return (
-        long_codes.join(F.broadcast(dtable), ["subspace", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("dist"), 6).alias("adc_dist"))
-        .filter(F.col("adc_dist").isNotNull())  # see adc_topk_within_lists
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _adc_rank(
+        _long_codes(codes)
+        .join(F.broadcast(_distance_table(probes_sub, codebook)),
+              ["subspace", "code"])
+        .filter(F.col("neighbor_id") != F.col("query_id")), k)

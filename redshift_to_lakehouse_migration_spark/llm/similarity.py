@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 
 from .dedup import DEFAULT_BUCKET_CAP, capped_band_candidates
 
+# Every ranked or thresholded cosine is rounded to this many digits: the
+# precision the DuckDB twins hard-code (queries.llm_similarity._cos_sql),
+# so both engines rank and threshold the same values.
+SIM_DIGITS = 9
+
 
 def _capped_bucket_pairs(assigned: DataFrame,
                          bucket_cap: int | None) -> DataFrame:
@@ -44,20 +49,21 @@ def _capped_bucket_pairs(assigned: DataFrame,
         "embedding", "bucket_id",
         norm(F.col("embedding")).alias("__nrm"),
         *([] if group is None else [group.alias("__vec_group")]))
+    if bucket_cap is not None:
+        # checkpoint only when capped: the capped plan reads the band table
+        # from 4+ branches (size aggregate, both self-join sides, oversized
+        # lookups), where checkpointing beats recomputing the 8-plane
+        # assignment per branch (measured at sf0.1: ~2.4s vs ~2.8s warm
+        # medians); the uncapped plan has just the two self-join sides, and
+        # there skipping the checkpoint wins (~1.5s) and drops the
+        # non-replicated-block caveat (see dedup.minhash_lsh_pairs).
+        bands = bands.localCheckpoint(eager=False)
     # Sign-LSH has ≤ 2^planes buckets → the size table broadcasts, so the
     # corpus assignment is never shuffled for the size annotation.
-    # materialize only when capped: the capped plan reads the band table
-    # from 4+ branches (size aggregate, both self-join sides, oversized
-    # lookups), where checkpointing beats recomputing the 8-plane
-    # assignment per branch (measured at sf0.1: ~2.4s vs ~2.8s warm
-    # medians); the uncapped plan has just the two self-join sides, and
-    # there skipping the checkpoint wins (~1.5s) and drops the
-    # non-replicated-block executor-loss caveat.
     return capped_band_candidates(
         bands, bucket_cap, payload=("embedding", "bucket_id", "__nrm"),
         group_col=None if group is None else "__vec_group",
-        distinct=False, broadcast_sizes=True,
-        materialize=bucket_cap is not None)
+        distinct=False, broadcast_sizes=True)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -89,8 +95,7 @@ def cosine(a: Column, b: Column) -> Column:
     Ranking/threshold consumers drop NULL sims explicitly, so undefined
     similarity yields no candidate row rather than an arbitrary one.
     """
-    raw = F.try_divide(dot(a, b), norm(a) * norm(b))
-    return F.nanvl(raw, F.lit(None).cast("double"))
+    return cosine_prenormed(a, b, norm(a), norm(b))
 
 
 def cosine_prenormed(a: Column, b: Column, norm_a: Column,
@@ -149,36 +154,40 @@ def lsh_bucket(emb: Column, projections: list[list[float]]) -> Column:
     return b
 
 
+def _top_k(scored: DataFrame, k: int, order: Column) -> DataFrame:
+    """The one top-k kernel: ``rank`` = row_number per ``query_id`` by
+    ``order`` with ties broken on ascending ``neighbor_id``, rows past
+    ``k`` dropped. Spark plans this ``row_number() <= k`` form as a
+    partition-local ``WindowGroupLimit`` before the window exchange (the
+    local top-k of REPOSE, ICDE 2021), so every ranking operator gets it."""
+    w = W.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def cosine_topk(corpus: DataFrame, probes: DataFrame, id_col: str,
-                vec_col: str, k: int, probe_id_col: str | None = None,
-                round_digits: int | None = 9) -> DataFrame:
+                vec_col: str, k: int) -> DataFrame:
     """Exact top-k cosine neighbors of each probe vector.
 
     ``probes`` is broadcast (bounded probe set); the corpus streams. Output:
     (query_id, neighbor_id, sim, rank).
     """
-    probe_id_col = probe_id_col or id_col
     # norms once per ROW on both sides, not per (probe × corpus) pair —
     # cosine_prenormed leaves one O(d) fold per pair instead of three
-    q = probes.select(F.col(probe_id_col).alias("query_id"),
+    q = probes.select(F.col(id_col).alias("query_id"),
                       F.col(vec_col).alias("__q_emb"),
                       norm(F.col(vec_col)).alias("__q_nrm"))
     corpus = corpus.withColumn("__c_nrm", norm(F.col(vec_col)))
-    sim = cosine_prenormed(F.col("__q_emb"), F.col(vec_col),
-                           F.col("__q_nrm"), F.col("__c_nrm"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    sim = F.round(cosine_prenormed(F.col("__q_emb"), F.col(vec_col),
+                                   F.col("__q_nrm"), F.col("__c_nrm")),
+                  SIM_DIGITS)
+    return _top_k(
         corpus.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", F.col(id_col).alias("neighbor_id"),
                 sim.alias("sim"))
-        .filter(F.col("sim").isNotNull())  # undefined sim → no candidate
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        .filter(F.col("sim").isNotNull()),  # undefined sim → no candidate
+        k, F.col("sim").desc())
 
 
 def lsh_assign(corpus: DataFrame, id_col: str, vec_col: str,
@@ -190,7 +199,6 @@ def lsh_assign(corpus: DataFrame, id_col: str, vec_col: str,
 
 
 def cosine_near_pairs(assigned: DataFrame, threshold: float,
-                      round_digits: int | None = 9,
                       bucket_cap: int | None = DEFAULT_BUCKET_CAP,
                       ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, confined to LSH
@@ -214,10 +222,9 @@ def cosine_near_pairs(assigned: DataFrame, threshold: float,
     the realized bucket size reproduces uncapped output bit-for-bit.
     """
     cand = _capped_bucket_pairs(assigned, bucket_cap)
-    sim = cosine_prenormed(F.col("embedding_1"), F.col("embedding_2"),
-                           F.col("__nrm_1"), F.col("__nrm_2"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_prenormed(F.col("embedding_1"), F.col("embedding_2"),
+                                   F.col("__nrm_1"), F.col("__nrm_2")),
+                  SIM_DIGITS)
     return (
         cand.select(F.col("doc_id_1").alias("vec_id_1"),
                     F.col("doc_id_2").alias("vec_id_2"),
@@ -228,8 +235,7 @@ def cosine_near_pairs(assigned: DataFrame, threshold: float,
 
 def ivf_assign(corpus: DataFrame, centroids: DataFrame, id_col: str,
                vec_col: str, centroid_id_col: str, centroid_vec_col: str,
-               nprobe: int = 1, round_digits: int | None = 9,
-               keep_vec: bool = True) -> DataFrame:
+               nprobe: int = 1, keep_vec: bool = True) -> DataFrame:
     """IVF coarse quantization: assign every vector to its ``nprobe``
     nearest centroids by cosine (deterministic tie-break on centroid id).
     Centroids broadcast; the corpus streams — one pass, the only shuffle is
@@ -250,10 +256,9 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame, id_col: str,
     c = centroids.select(F.col(centroid_id_col).alias("centroid_id"),
                          F.col(centroid_vec_col).alias("__c_emb"),
                          norm(F.col(centroid_vec_col)).alias("__c_nrm"))
-    sim = cosine_prenormed(F.col("embedding"), F.col("__c_emb"),
-                           F.col("__v_nrm"), F.col("__c_nrm"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine_prenormed(F.col("embedding"), F.col("__c_emb"),
+                                   F.col("__v_nrm"), F.col("__c_nrm")),
+                  SIM_DIGITS)
     scored = (
         corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).alias("embedding"),
@@ -292,8 +297,8 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame, id_col: str,
     )
 
 
-def ivf_topk(corpus_assigned: DataFrame, probes_assigned: DataFrame, k: int,
-             round_digits: int | None = 9) -> DataFrame:
+def ivf_topk(corpus_assigned: DataFrame, probes_assigned: DataFrame,
+             k: int) -> DataFrame:
     """IVF search: each probe scans only the inverted lists of its probed
     centroids (equality join on centroid_id), exact cosine re-rank, top-k.
     ``probes_assigned``: (query_id, q_embedding, centroid_id) — one row per
@@ -303,13 +308,10 @@ def ivf_topk(corpus_assigned: DataFrame, probes_assigned: DataFrame, k: int,
         "__q_nrm", norm(F.col("q_embedding")))
     corpus_assigned = corpus_assigned.withColumn(
         "__c_nrm", norm(F.col("embedding")))
-    sim = cosine_prenormed(F.col("q.q_embedding"), F.col("c.embedding"),
-                           F.col("q.__q_nrm"), F.col("c.__c_nrm"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    sim = F.round(cosine_prenormed(F.col("q.q_embedding"),
+                                   F.col("c.embedding"), F.col("q.__q_nrm"),
+                                   F.col("c.__c_nrm")), SIM_DIGITS)
+    return _top_k(
         probes_assigned.alias("q")
         .join(corpus_assigned.alias("c"), "centroid_id")
         .filter(F.col("c.vec_id") != F.col("q.query_id"))
@@ -318,14 +320,11 @@ def ivf_topk(corpus_assigned: DataFrame, probes_assigned: DataFrame, k: int,
                 sim.alias("sim"))
         .filter(F.col("sim").isNotNull())  # undefined sim → no candidate
         .groupBy("query_id", "neighbor_id")  # probed lists may overlap
-        .agg(F.max("sim").alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        .agg(F.max("sim").alias("sim")),
+        k, F.col("sim").desc())
 
 
 def topk_within_buckets(assigned: DataFrame, k: int,
-                        round_digits: int | None = 9,
                         bucket_cap: int | None = DEFAULT_BUCKET_CAP,
                         ) -> DataFrame:
     """ANN: exact cosine re-rank confined to LSH buckets (equality join).
@@ -356,16 +355,11 @@ def topk_within_buckets(assigned: DataFrame, k: int,
                  F.col("__nrm_1").alias("__n_nrm"),
                  F.col("bucket_id_2").alias("bucket_id")),
     )).alias("p")).select("p.*")
-    sim = cosine_prenormed(F.col("__q_emb"), F.col("__n_emb"),
-                           F.col("__q_nrm"), F.col("__n_nrm"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    sim = F.round(cosine_prenormed(F.col("__q_emb"), F.col("__n_emb"),
+                                   F.col("__q_nrm"), F.col("__n_nrm")),
+                  SIM_DIGITS)
+    return _top_k(
         directed.select("query_id", "neighbor_id", "bucket_id",
                         sim.alias("sim"))
-        .filter(F.col("sim").isNotNull())  # undefined sim → no candidate
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        .filter(F.col("sim").isNotNull()),  # undefined sim → no candidate
+        k, F.col("sim").desc())

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
+from concurrent.futures import wait as fwait
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
@@ -79,13 +81,15 @@ class Pipeline:
         layer, SURVEY §3; off by default — at scale you want the fused
         DQ pass to report counts instead).
 
-        ``max_workers > 1`` runs topologically-ready nodes concurrently
-        (Spark's scheduler interleaves the jobs across executors — the
-        in-session analog of the reference's parallel workflow tasks,
-        `databricks.yml:131-162`, where all four bronze ingests run at
-        once). Plan construction is lazy and cheap; concurrency only pays
-        on nodes that execute jobs (materialize/count), so the default
-        stays serial.
+        Nodes are submitted to a ``max_workers`` thread pool as soon as
+        their deps are done. ``max_workers > 1`` runs topologically-ready
+        nodes concurrently (Spark's scheduler interleaves the jobs across
+        executors — the in-session analog of the reference's parallel
+        workflow tasks, `databricks.yml:131-162`, where all four bronze
+        ingests run at once). Plan construction is lazy and cheap;
+        concurrency only pays on nodes that execute jobs
+        (materialize/count), so the default of 1 runs the same loop one
+        node at a time.
         """
         # Validate dependency names up front: an undeclared dep would
         # otherwise surface as a bare KeyError from the sorter's implicit
@@ -95,28 +99,11 @@ class Pipeline:
             - set(self._nodes))
         if unknown:
             raise ValueError(f"undeclared dependency node(s): {unknown}")
-        if max_workers <= 1:
-            order = TopologicalSorter(
-                {n.name: set(n.deps) for n in self._nodes.values()})
-            outputs: dict[str, DataFrame] = {}
-            runs: list[NodeRun] = []
-            for name in order.static_order():
-                node = self._nodes[name]
-                missing = [d for d in node.deps if d not in outputs]
-                if missing:
-                    raise ValueError(
-                        f"node {name!r} missing deps {missing}")
-                runs.append(self._run_node(node, outputs, count_rows))
-            return outputs, runs
-
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
-        from concurrent.futures import wait as fwait
-
         sorter = TopologicalSorter(
             {n.name: set(n.deps) for n in self._nodes.values()})
         sorter.prepare()
-        outputs = {}
-        runs = []
+        outputs: dict[str, DataFrame] = {}
+        runs: list[NodeRun] = []
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             pending = {}
             while sorter.is_active():

@@ -31,9 +31,6 @@ _DIM = 64
 _N_PLANES = 8
 PROJECTIONS = sim.make_projections(_N_PLANES, _DIM, seed=7)
 
-_dot = sim.dot
-_norm = sim.norm
-
 
 def _dot_sql(a: str, b: str) -> str:
     return (f"list_reduce(list_transform(list_zip({a}, {b}), "
@@ -191,7 +188,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector statistics with decimal-exact averages."""
     e = spread(load(spark, sf_dir, "embeddings"), spark)
-    n = _norm(F.col("embedding"))
+    n = sim.norm(F.col("embedding"))
     return (
         e.select("vec_id", "label", n.alias("norm"))
         .groupBy("label")
@@ -222,9 +219,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = sim.ivf_assign(corpus, trained, "vec_id", "embedding",
                               "centroid_id", "embedding", nprobe=1)
     c = trained.select("centroid_id", F.col("embedding").alias("__c_emb"))
-    cos = F.round(F.aggregate(
-        F.zip_with("embedding", "__c_emb", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x), 6)
+    cos = F.round(sim.dot(F.col("embedding"), F.col("__c_emb")), 6)
     return (
         assigned.join(F.broadcast(c), "centroid_id")
         .select("centroid_id", "vec_id", cos.alias("cos_sim"))

@@ -9,11 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.llm.dedup import (
-    jaccard_pairs, minhash_lsh_pairs, norm_text, shingles)
+    jaccard_pairs, materialize_minhash, minhash_lsh_pairs,
+    minhash_pairs_from_tables, norm_text, shingles, simhash_near_pairs,
+    simhash_signatures)
 from redshift_to_lakehouse_migration_spark.llm.pipeline import funnel
+from redshift_to_lakehouse_migration_spark.llm.similarity import (
+    cosine_near_pairs, lsh_assign)
 from redshift_to_lakehouse_migration_spark.queries import QUERIES
 from redshift_to_lakehouse_migration_spark.queries.curation import (
     contamination_check)
+from redshift_to_lakehouse_migration_spark.queries.llm_similarity import (
+    PROJECTIONS)
 from redshift_to_lakehouse_migration_spark.tables import load
 from tests.conftest import SF_SMOKE as SF
 
@@ -165,6 +171,19 @@ def _jaccard_pairs(spark):
     return jaccard_pairs(shingles(normed, "doc_id", "norm"), blocks, 0.4)
 
 
+def _lsh_assigned(spark):
+    return lsh_assign(load(spark, SF, "embeddings"), "vec_id", "embedding",
+                      PROJECTIONS)
+
+
+def _checkpointed_tables(df) -> set[int]:
+    """Distinct checkpointed tables (LogicalRDD leaves, by RDD id) in the
+    optimized plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return {leaves.apply(i).rdd().id() for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"}
+
+
 @pytest.mark.parametrize("build, n_tables", [
     (_jaccard_pairs, 1),  # the capped shingle-block table
     (lambda spark: minhash_lsh_pairs(load(spark, SF, "documents"),
@@ -174,19 +193,34 @@ def _jaccard_pairs(spark):
     # the narrow meta proxy + the connected-components label table (the
     # Jaccard checkpoint sits under the components' eager checkpoint)
     (lambda spark: funnel(load(spark, SF, "documents")), 2),
+    (lambda spark: simhash_near_pairs(simhash_signatures(
+        load(spark, SF, "documents"), "doc_id", "text")),
+     1),  # the stacked band table
+    (lambda spark: cosine_near_pairs(_lsh_assigned(spark), 0.35,
+                                     bucket_cap=512),
+     1),  # the capped embedding band table
 ], ids=["jaccard_pairs", "minhash_lsh_pairs", "contamination_check",
-        "funnel"])
+        "funnel", "simhash_near_pairs", "cosine_near_pairs_capped"])
 def test_multi_consumer_inputs_are_checkpointed(spark, build, n_tables):
     """Each of these plans reads one expensive derived table 3+ times; the
     localCheckpoint keeps the scan→normalize→shingle/gram subtree from
     re-running per consumer. Counts the distinct checkpointed tables
     (LogicalRDD leaves, by RDD id) in the optimized plan, so a dropped
     checkpoint fails here even though results stay identical."""
-    leaves = build(spark)._jdf.queryExecution().optimizedPlan() \
-        .collectLeaves()
-    rdds = {leaves.apply(i).rdd().id() for i in range(leaves.size())
-            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"}
-    assert len(rdds) >= n_tables
+    assert len(_checkpointed_tables(build(spark))) >= n_tables
+
+
+def test_cheap_or_parquet_band_tables_are_not_checkpointed(spark, tmp_path):
+    """The other side of the producers' checkpoint decision: the uncapped
+    embedding path reads its band projection from just the two self-join
+    sides, and `minhash_pairs_from_tables` reads parquet, so neither plan
+    may hold a checkpointed table (non-replicated blocks for nothing)."""
+    paths = materialize_minhash(load(spark, SF, "documents"), "doc_id",
+                                "text", str(tmp_path))
+    for df in (cosine_near_pairs(_lsh_assigned(spark), 0.35,
+                                 bucket_cap=None),
+               minhash_pairs_from_tables(spark, paths)):
+        assert _checkpointed_tables(df) == set()
 
 
 def test_no_undeclared_corpus_broadcast_hints(spark):

@@ -126,6 +126,34 @@ def test_ivfpq_candidates_subset_and_ranked(spark, sub, init):
         assert dists == sorted(dists), q
 
 
+def test_adc_ties_rank_by_neighbor_id_and_cut_at_k(spark):
+    """Hand-built codebook (2 subspaces × 2 codes): neighbours 9 and 2
+    carry IDENTICAL codes, so their ADC distances tie exactly. Both ADC
+    operators must rank the tie by ascending neighbor_id and keep only
+    rank <= k — the cut falls inside the tie, so neighbour 9 is dropped.
+    Neighbour 9 is listed first, so input order cannot pass for the
+    tie-break; the probe's own code row (100) must not rank itself."""
+    codebook = spark.createDataFrame(
+        [(s, c, [float(c), float(c)]) for s in (0, 1) for c in (0, 1)],
+        "subspace int, code int, centroid array<double>")
+    probes_sub = spark.createDataFrame(
+        [(100, 0, [0.0, 0.0]), (100, 1, [0.0, 0.0])],
+        "vec_id long, subspace int, subvec array<double>")
+    codes = spark.createDataFrame(
+        [(9, [0, 1]), (1, [1, 1]), (100, [0, 0]), (2, [0, 1]), (5, [0, 0])],
+        "vec_id long, codes array<int>")
+    lists = codes.select("vec_id", F.lit(0).alias("centroid_id"))
+    plists = probes_sub.select("vec_id", F.lit(0).alias("centroid_id")) \
+        .distinct()
+    expected = [(100, 5, 0.0, 1), (100, 2, 2.0, 2)]
+    for out in (pq.adc_topk(codes, probes_sub, codebook, k=2),
+                pq.adc_topk_within_lists(codes, lists, probes_sub, plists,
+                                         codebook, k=2)):
+        rows = sorted(((r.query_id, r.neighbor_id, r.adc_dist, r.rank)
+                       for r in out.collect()), key=lambda r: r[3])
+        assert rows == expected
+
+
 # --- measured retrieval quality (recall gate for the refined stack) ---
 
 def test_ivfpq_refined_recall_gate_on_clustered_corpus(spark):
