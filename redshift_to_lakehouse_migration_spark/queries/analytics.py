@@ -148,16 +148,8 @@ def dq_accepted_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def recon_global_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A5/A6 reconciliation scalars: one row of SUM/AVG/MIN/MAX/COUNT/
-    COUNT DISTINCT per measure (`migration_validation/reconciliation.py:58-92`).
-
-    The pruned projection is spread across cores before the aggregate: the
-    local single-row-group parquet file scans as ONE split, serializing the
-    whole partial-aggregate pass onto one core (guide §2.5 input-skew case;
-    measured at sf0.1: 1.60 s → 1.18 s median). No-op at cluster scale."""
-    from ..tables import spread
-    li = spread(load(spark, sf_dir, "lineitem")
-                .select("l_orderkey", "l_extendedprice", "l_quantity",
-                        "l_discount", "l_shipdate"), spark)
+    COUNT DISTINCT per measure (`migration_validation/reconciliation.py:58-92`)."""
+    li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("row_count"),
         F.countDistinct("l_orderkey").alias("distinct_orders"),
@@ -551,13 +543,8 @@ def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holistic aggregates: exact interpolated percentiles per return flag
     (Spark `percentile` ≡ ANSI `quantile_cont` bit-for-bit on doubles).
     Exact percentile sorts within groups; at 100 TB switch to
-    `approx_percentile` (t-digest, mergeable) and bound the error instead.
-    The pruned projection is spread across cores before the holistic agg so
-    the value buffers at least BUILD in parallel (merge stays per-group)."""
-    from ..tables import spread
-    li = spread(load(spark, sf_dir, "lineitem")
-                .select("l_returnflag", "l_quantity", "l_extendedprice"),
-                spark)
+    `approx_percentile` (t-digest, mergeable) and bound the error instead."""
+    li = load(spark, sf_dir, "lineitem")
     # ONE percentile buffer for the three l_extendedprice quantiles (array
     # percentages) instead of three: `percentile` is holistic — each
     # aggregate expression keeps its own value->count map and sorts it

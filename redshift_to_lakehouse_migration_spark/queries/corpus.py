@@ -2,13 +2,14 @@
 
 `corpus_funnel` evaluates the ENTIRE training-data pipeline (raw → gate →
 exact dedup → near-dup clustering → decontamination → sampling,
-`llm/pipeline.py`) as a single lazy plan and reports per-stage doc/token
-counts. Every count is integer arithmetic, so the DuckDB oracle replays
-the full composition — including the iterative components step, expressed
-as a recursive CTE — and the driver value-hashes the result. This is the
-end-to-end correctness anchor for the whole LLM-pipeline surface; the
-materializing runner (`run_corpus_pipeline`) is benched separately in
-`bench.py`.
+`llm/pipeline.py`) lazily — the materializing runner's own stage chain,
+with three localCheckpoints in place of parquet writes — and reports
+per-stage doc/token counts. Every count is integer arithmetic, so the
+DuckDB oracle replays the full composition — including the iterative
+components step, expressed as a recursive CTE — and the driver
+value-hashes the result. This is the end-to-end correctness anchor for
+the whole LLM-pipeline surface; the materializing runner
+(`run_corpus_pipeline`) is benched separately in `bench.py`.
 """
 
 from __future__ import annotations
@@ -23,13 +24,14 @@ from .sampling import DEFAULT_CEILING, STRATUM_CEILING
 
 
 def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Size-adaptive spread (r12): funnel()'s narrow proxy + capped-
-    # shingle localCheckpoints (r11) compute every expensive text pass
-    # ONCE, so repartitioning a SMALL corpus first costs a full-text
-    # shuffle it no longer amortizes — measured ABBA at local[32]:
-    # 6.56 → 5.34 s at 0.59 MB (bare wins), 13.6 → 10.8 s at ~3 MB
-    # (spread wins; the serial pass dominates). min_bytes takes the
-    # measured branch at each scale; no-op difference at cluster scale.
+    # Size-adaptive spread (r12): funnel()'s stage localCheckpoints keep
+    # the expensive text passes from re-running per consumer, so
+    # repartitioning a SMALL corpus first costs a full-text shuffle it
+    # does not amortize. Measured on this chain body, same-session ABBA
+    # at local[4] (floor 256 KB), 10 pairs, spread → bare medians:
+    # 3.45 → 3.19 s at 65 KB (bare faster in 9/10), 5.14 → 5.43 s at
+    # 0.59 MB (spread faster in 6/10). min_bytes takes the faster branch
+    # at each size; no-op difference at cluster scale.
     from ..llm.pipeline import funnel
     return funnel(spread(load(spark, sf_dir, "documents"), spark,
                          min_bytes_per_core=SPREAD_TEXT_MIN_BYTES_PER_CORE))

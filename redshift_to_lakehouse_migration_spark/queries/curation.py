@@ -29,18 +29,34 @@ NGRAM_N = 5
 BENCH_MOD = 97
 
 
+def gram_tokens(text: F.Column) -> F.Column:
+    """Word tokens for the NGRAM_N-gram window: the trim-LAST norm
+    (``llm.dedup.norm_text``) split on the literal single space — one
+    regex rewrite of the corpus bytes plus a trivial split, and no
+    phantom empty edge tokens when text carries leading/trailing
+    non-space whitespace (Spark's ``trim`` strips only spaces, so the old
+    trim-first forms kept a trailing newline as a trailing empty token).
+    The DuckDB oracles mirror the same order; the engine-level whitespace
+    envelope stays pinned in tests/test_text_parity.py."""
+    return F.split(norm_text(text), " ")
+
+
+def word_grams(t: F.Column) -> F.Column:
+    """The sliding window of word NGRAM_N-grams over the token array
+    ``t`` (:func:`gram_tokens`). Pass ``t`` as a lambda VARIABLE through
+    ``functions.bind``: a captured token expression re-evaluates the
+    split+regex per gram index (O(tokens x doc_bytes) per row). Not total
+    — sequence(1, n<1) runs DESCENDING — so callers drop or guard docs
+    shorter than NGRAM_N."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(t) - (NGRAM_N - 1)),
+        lambda i: F.concat_ws(" ", F.slice(t, i, NGRAM_N)),
+    )
+
+
 def _gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document array of distinct word NGRAM_N-grams (map-side only:
     normalize → split → sliding window → array_distinct, no explode).
-
-    Tokenization is the trim-LAST norm (``llm.dedup.norm_text``) split on
-    the literal single space: one regex rewrite of the corpus bytes plus
-    a trivial split, and no phantom empty edge tokens when text carries
-    leading/trailing non-space whitespace (Spark's ``trim`` strips only
-    spaces, so the old trim-first forms kept a trailing newline as a
-    trailing empty token). The DuckDB oracle mirrors the same order;
-    the engine-level whitespace envelope stays pinned in
-    tests/test_text_parity.py.
 
     Size-adaptive spread (r12): the caller localCheckpoints this table,
     so the gram build runs ONCE — repartitioning a SMALL corpus ahead of
@@ -50,16 +66,11 @@ def _gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured branch at each scale; no-op at cluster scale."""
     d = spread(load(spark, sf_dir, "documents"), spark,
                min_bytes_per_core=SPREAD_TEXT_MIN_BYTES_PER_CORE)
-    toks = F.split(norm_text(F.col("text")), " ")
-    # bind: tokens as a lambda VARIABLE, not a lambda capture — captures
-    # re-evaluate the split+regex per gram index (functions.bind)
-    grams = bind(toks, lambda t: F.transform(
-        F.sequence(F.lit(1), F.size(t) - (NGRAM_N - 1)),
-        lambda i: F.concat_ws(" ", F.slice(t, i, NGRAM_N)),
-    ))
+    toks = gram_tokens(F.col("text"))
     return (
         d.filter(F.size(toks) >= NGRAM_N)
-        .select("doc_id", "lang", F.array_distinct(grams).alias("grams"))
+        .select("doc_id", "lang",
+                F.array_distinct(bind(toks, word_grams)).alias("grams"))
     )
 
 

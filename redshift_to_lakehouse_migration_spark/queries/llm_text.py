@@ -267,11 +267,12 @@ ORACLES = {
 
 
 def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-corpus prep: quality gate (length + punct +
-    stopword mix) → exact-dedup keeper selection → per-language corpus
-    stats. The canonical LLM-data funnel, composed from the same
-    expressions the individual queries verify — one scan, one groupBy for
-    the dedup, one for the stats; linear at 100 TB.
+    """End-to-end training-corpus prep: quality gate (the corpus
+    runner's ``gate_predicate``: length + punct + stopword mix) →
+    exact-dedup keeper selection → per-language corpus stats. The
+    canonical LLM-data funnel, composed from the same expressions the
+    individual queries verify — one scan, one groupBy for the dedup, one
+    for the stats; linear at 100 TB.
 
     Size-adaptive spread (r12): Catalyst already reuses the content_hash
     exchange across the keeper/labeled branches, so the gate expressions
@@ -279,24 +280,13 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     than it saves (measured ABBA at local[32]: 1.33 → 1.18 s at 0.59 MB),
     while past the ``SPREAD_TEXT_MIN_BYTES_PER_CORE`` crossover the serial gate
     pass dominates and spread pays again; no-op at cluster scale."""
+    from ..llm.pipeline import gate_predicate, stage_raw
     d = spread(load(spark, sf_dir, "documents"), spark,
                min_bytes_per_core=SPREAD_TEXT_MIN_BYTES_PER_CORE)
-    text = F.col("text")
-    norm = norm_text(text)
-    n_chars = F.length(text)
-    n_tokens = ws_token_count(text)
-    n_punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
-    n_stop = word_run_count(text, STOPWORDS)
-    # threshold gates in integer arithmetic so borderline docs can never
-    # flip between engines (float ratio comparisons hash-mismatched the
-    # driver oracle in round 1): punct_ratio < 0.2  ⇔  n_punct*5 < n_chars;
-    # stop_ratio ∈ [0.01, 0.6]  ⇔  n_stop*100 >= n_tokens ∧ n_stop*10 <= n_tokens*6
     gated = (
-        d.filter(text.isNotNull() & text.rlike(r"\S"))
-        .select("doc_id", "lang", F.md5(norm).alias("content_hash"),
-                n_tokens.cast("long").alias("n_tokens"))
-        .filter((n_tokens >= 5) & (n_punct * 5 < n_chars)
-                & (n_stop * 100 >= n_tokens) & (n_stop * 10 <= n_tokens * 6))
+        stage_raw(d).filter(gate_predicate())
+        .select("doc_id", "lang",
+                F.md5(norm_text("text")).alias("content_hash"), "n_tokens")
     )
     # Per-language accounting at each doc's OWN language: dup groups span
     # languages in real corpora (the generator assigns lang independently

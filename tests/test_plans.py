@@ -190,9 +190,10 @@ def _checkpointed_tables(df) -> set[int]:
                                      "doc_id", "text"),
      2),  # shingle table + band table
     (lambda spark: contamination_check(spark, SF), 1),  # gram arrays
-    # the narrow meta proxy + the connected-components label table (the
-    # Jaccard checkpoint sits under the components' eager checkpoint)
-    (lambda spark: funnel(load(spark, SF, "documents")), 2),
+    # the exact_dedup and decontaminated stages + the connected-components
+    # label table (the shingle_blocks checkpoint sits under the
+    # components' eager checkpoint)
+    (lambda spark: funnel(load(spark, SF, "documents")), 3),
     (lambda spark: simhash_near_pairs(simhash_signatures(
         load(spark, SF, "documents"), "doc_id", "text")),
      1),  # the stacked band table
@@ -253,6 +254,19 @@ def test_no_undeclared_corpus_broadcast_hints(spark):
             f"{name}: declared hint signature(s) {missing} no longer in "
             f"the plan (observed {hits}) — update DECLARED_BOUNDED_HINTS "
             "so the allowlist matches what actually runs")
+
+
+def test_corpus_chain_broadcast_hints_are_declared(spark):
+    """The stage chain behind ``corpus_funnel`` and ``run_corpus_pipeline``
+    keeps its stages behind checkpoints or parquet read-backs, which the
+    per-query audit above cannot walk into. Audited with every stage
+    lazy, its hints must equal ``DECLARED_CHAIN_HINTS`` as a multiset."""
+    from tools.plan_audit import DECLARED_CHAIN_HINTS, corpus_chain_hint_scans
+    hits = corpus_chain_hint_scans(load(spark, SF, "documents"))
+    assert sorted(hits) == sorted(DECLARED_CHAIN_HINTS[0]), (
+        f"corpus stage chain hint signature {hits} != declared "
+        f"{DECLARED_CHAIN_HINTS[0]} — drop the hint or update "
+        "DECLARED_CHAIN_HINTS with a re-verifiable reason")
 
 
 def test_rehinted_corpus_join_flags(spark):

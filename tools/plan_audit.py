@@ -70,9 +70,6 @@ DECLARED_BOUNDED_HINTS: dict[str, tuple[list, str]] = {
         "slice is the harness stand-in, deployment side is a fixed "
         "eval-suite artifact (reads the localCheckpointed gram table, "
         "hence the LogicalRDD leaf)"),
-    "corpus_funnel": (
-        [["documents"]],
-        "same benchmark gram set as contamination_check"),
     "events_conversion_funnel": (
         [["events"], ["events"], ["events"]],
         "one-row stage-count aggregates"),
@@ -109,6 +106,25 @@ DECLARED_BOUNDED_HINTS: dict[str, tuple[list, str]] = {
         "PQ codebooks + per-query ADC distance table (|queries| x m x k)"),
     "mix_datasets": ([["documents"]], "one-row grand-total aggregate"),
 }
+
+# The corpus stage chain (`llm/pipeline._chain`) is audited on its own,
+# with every stage left lazy: `corpus_funnel` localCheckpoints three of
+# its stages and `run_corpus_pipeline` reads each stage back from
+# parquet, and both put the kept stage's plan under a leaf that
+# ``broadcast_hint_corpus_scans`` cannot walk into. Pinned the same way
+# as DECLARED_BOUNDED_HINTS, and read by tests/test_plans.py.
+DECLARED_CHAIN_HINTS: tuple[list, str] = (
+    [["documents"]],
+    "stage_decontaminate's benchmark gram set — the same bounded side "
+    "as contamination_check")
+
+
+def corpus_chain_hint_scans(docs) -> list:
+    """``broadcast_hint_corpus_scans`` of the whole stage chain over
+    ``docs``, with no stage checkpointed or written."""
+    from redshift_to_lakehouse_migration_spark.llm.pipeline import _chain
+    return broadcast_hint_corpus_scans(
+        _chain(docs, lambda make_df, path, stage: make_df()))
 
 
 def undeclared_hint_excess(observed: list, declared: list) -> list:
@@ -340,12 +356,22 @@ def main() -> None:
         lines += ["", "STALE hint declarations (declared signatures the "
                       "plan no longer carries — partial loss included): "
                       f"{stale_hints}."]
+    from redshift_to_lakehouse_migration_spark.tables import load
+    chain_hints = corpus_chain_hint_scans(load(spark, SF_DIR, "documents"))
+    chain_ok = sorted(chain_hints) == sorted(DECLARED_CHAIN_HINTS[0])
+    lines += ["", "Corpus stage chain (`llm/pipeline._chain`, every stage "
+                  f"lazy): hint signature {chain_hints} — "
+                  + (f"declared: {DECLARED_CHAIN_HINTS[1]}." if chain_ok
+                     else f"DIFFERS from the declared "
+                          f"{DECLARED_CHAIN_HINTS[0]}.")]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries); undeclared: {bad}; "
           f"bounded: {len(bounded)}; stale declarations: {stale}; "
           f"undeclared hints: {bad_hints}; bounded hints: "
-          f"{len(bounded_hints)}; stale hint declarations: {stale_hints}")
+          f"{len(bounded_hints)}; stale hint declarations: {stale_hints}; "
+          f"corpus chain hints: {chain_hints}"
+          f"{'' if chain_ok else ' (differ from declared)'}")
     spark.stop()
 
 
