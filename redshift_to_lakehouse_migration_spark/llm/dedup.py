@@ -21,6 +21,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .components import connected_components
+
 MERSENNE = (1 << 31) - 1
 
 # A band bucket larger than this switches from all-pairs to a star around
@@ -37,6 +39,9 @@ DEFAULT_BUCKET_CAP = 512
 # dropped from BOTH the pair join and the per-doc size denominators, so
 # Jaccard stays internally consistent. Mirrored in the DuckDB oracles.
 DEFAULT_SHINGLE_DF_CAP = 1024
+
+# Two docs are near-duplicates at blocked 3-shingle Jaccard ≥ this.
+NEAR_DUP_JACCARD = 0.4
 
 
 def norm_text(text: str | Column) -> Column:
@@ -59,6 +64,19 @@ def norm_text(text: str | Column) -> Column:
     İ (U+0130) to i+combining-dot where utf8proc yields plain i."""
     c = F.col(text) if isinstance(text, str) else text
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+
+
+def has_text(text: str | Column) -> Column:
+    """The non-empty-text predicate: non-NULL with at least one
+    non-whitespace character. Every corpus query and stage filters on
+    this one definition."""
+    c = F.col(text) if isinstance(text, str) else text
+    return c.isNotNull() & c.rlike(r"\S")
+
+
+def content_hash(text: str | Column) -> Column:
+    """The exact-dedup key: md5 of the :func:`norm_text` normal form."""
+    return F.md5(norm_text(text))
 
 
 def ws_token_count(text: str | Column) -> Column:
@@ -107,7 +125,7 @@ def exact_duplicates(docs: DataFrame, id_col: str,
     return (
         docs.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("doc_id"),
-                F.md5(norm_text(text_col)).alias("content_hash"))
+                content_hash(text_col).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("keeper_doc_id"),
              F.count("*").alias("member_count"),
@@ -116,17 +134,16 @@ def exact_duplicates(docs: DataFrame, id_col: str,
     )
 
 
-def capped_shingle_blocks(sh: DataFrame, blocks: DataFrame,
-                          shingle_df_cap: int = DEFAULT_SHINGLE_DF_CAP,
-                          ) -> DataFrame:
+def capped_shingle_blocks(sh: DataFrame, blocks: DataFrame) -> DataFrame:
     """(doc_id, shingle, block) with the boilerplate DF cap applied.
 
-    Shingles with within-block document frequency above ``shingle_df_cap``
-    are excluded from the pair join AND the size denominators: a shingle
-    shared by d docs costs d² join rows on one partition, and past the cap
-    it is boilerplate with no discriminating power (identical docs are the
-    exact-dup fast path's job, not Jaccard's). One extra window pass over
-    the shingle shuffle — linear state, no new shuffle key.
+    Shingles with within-block document frequency above
+    ``DEFAULT_SHINGLE_DF_CAP`` are excluded from the pair join AND the
+    size denominators: a shingle shared by d docs costs d² join rows on
+    one partition, and past the cap it is boilerplate with no
+    discriminating power (identical docs are the exact-dup fast path's
+    job, not Jaccard's). One extra window pass over the shingle shuffle —
+    linear state, no new shuffle key.
 
     This is the table to MATERIALIZE at scale: :func:`jaccard_pairs_from_
     capped` consumes it three times (pair join ×2, size denominators), so
@@ -135,7 +152,7 @@ def capped_shingle_blocks(sh: DataFrame, blocks: DataFrame,
     sh = sh.join(blocks, "doc_id")
     w_df = Window.partitionBy("block", "shingle")
     return (sh.withColumn("__df", F.count(F.lit(1)).over(w_df))
-            .filter(F.col("__df") <= shingle_df_cap).drop("__df"))
+            .filter(F.col("__df") <= DEFAULT_SHINGLE_DF_CAP).drop("__df"))
 
 
 def jaccard_pairs_from_capped(sh: DataFrame, threshold: float) -> DataFrame:
@@ -166,24 +183,31 @@ def jaccard_pairs_from_capped(sh: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def jaccard_pairs(sh: DataFrame, blocks: DataFrame, threshold: float,
-                  shingle_df_cap: int = DEFAULT_SHINGLE_DF_CAP) -> DataFrame:
-    """Pairwise Jaccard within blocks, inline. ``sh``: (doc_id, shingle);
-    ``blocks``: (doc_id, block). Returns pairs ≥ threshold. Composition of
-    :func:`capped_shingle_blocks` + :func:`jaccard_pairs_from_capped`; at
-    cluster scale, materialize the capped table to PARQUET between the two
-    instead (see :func:`capped_shingle_blocks`).
+def shingle_blocks(docs: DataFrame) -> DataFrame:
+    """The near-dup signature table of a (doc_id, text) frame: normalized
+    3-token shingles, blocked by the 16-char normalized prefix, with the
+    boilerplate DF cap applied (:func:`capped_shingle_blocks`). The one
+    definition `dedup_ngram_jaccard`, `dedup_clusters` and the corpus
+    runner's near-dup stage build on.
 
-    The capped table is localCheckpointed in-plan:
-    :func:`jaccard_pairs_from_capped` consumes it THREE times (both
-    pair-join sides + the size denominators), so without it the whole
-    scan→normalize→shingle→window subtree runs 3-4× per action (measured
-    at sf0.1: 1.60 s → 1.34 s median with the checkpoint; plan Exchanges
-    42 → 15). Same non-replicated-block caveat as
-    :func:`minhash_lsh_pairs`."""
-    capped = capped_shingle_blocks(sh, blocks, shingle_df_cap) \
-        .localCheckpoint(eager=False)
-    return jaccard_pairs_from_capped(capped, threshold)
+    :func:`jaccard_pairs_from_capped` reads it three times (both pair-join
+    sides + the size denominators), so the caller keeps it: the queries
+    localCheckpoint it (measured at sf0.1: 1.60 s → 1.34 s median, plan
+    Exchanges 42 → 15), the runner writes it to parquet."""
+    normed = docs.select("doc_id", norm_text("text").alias("norm"))
+    sh = shingles(normed, "doc_id", "norm")
+    blocks = normed.select("doc_id",
+                           F.substring("norm", 1, 16).alias("block"))
+    return capped_shingle_blocks(sh, blocks)
+
+
+def near_dup_components(signatures: DataFrame) -> DataFrame:
+    """(node, comp) near-dup clusters over a :func:`shingle_blocks` table:
+    the pairs at Jaccard ≥ ``NEAR_DUP_JACCARD`` → min-label connected
+    components. Docs in no pair are absent (singletons)."""
+    pairs = jaccard_pairs_from_capped(signatures, NEAR_DUP_JACCARD) \
+        .select("doc_id_1", "doc_id_2")
+    return connected_components(pairs, "doc_id_1", "doc_id_2")
 
 
 def minhash_band_keys(sh: DataFrame, perms: list[tuple[int, int]],
@@ -241,22 +265,17 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
     never enter aggregation state; representative payloads are fetched by
     joining the (normally empty) oversized side back to ``bands``.
 
-    Star topology — and the recall contract it buys:
+    Star topology — and the recall contract it buys: ``group_col`` (a
+    full-signature hash column present in ``bands``, required when
+    capped) gives one star per signature group around the group's min-doc
+    representative, plus a star of group representatives around the
+    bucket's min-doc representative. B−1 pairs in total, and members with
+    IDENTICAL signatures are paired directly, so a mixed bucket (a band
+    collision joining several distinct boilerplate families) still
+    verifies each family internally even when the cross-family
+    (bucket-rep, group-rep) pairs fail the exact verify.
 
-    - With ``group_col`` (a full-signature hash column present in
-      ``bands``): one star per signature group around the group's min-doc
-      representative, plus a star of group representatives around the
-      bucket's min-doc representative. Same B−1 total, but members with
-      IDENTICAL signatures are paired directly, so a mixed bucket (a band
-      collision joining several distinct boilerplate families) still
-      verifies each family internally even when the cross-family
-      (bucket-rep, group-rep) pairs fail the exact verify.
-    - Without ``group_col``: a single star around the bucket's min-doc
-      representative. "Every member stays reachable" then holds only for
-      HOMOGENEOUS buckets — in a mixed bucket, members whose pair with the
-      representative fails the verify lose their intra-family edges.
-
-    Residual (documented) recall loss in both modes: similar-but-not-
+    Residual (documented) recall loss: similar-but-not-
     identical members of a mixed oversized bucket are only reachable
     through representative pairs; if those fail the verify, that family's
     near-dups in THIS bucket are dropped (other bands can still recover
@@ -302,9 +321,7 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
         # no annotation join, no (empty) oversized branches to plan.
         cand = pairs_with(bands)
         return cand.distinct() if distinct else cand
-    slim_cols = ["doc_id", *keys] + (
-        [group_col] if group_col and group_col not in keys else [])
-    slim = bands.select(*slim_cols)
+    slim = bands.select("doc_id", *keys, group_col)
     # One row per bucket: size + min-doc representative id. Ids only — a
     # hash aggregate with two long-ish state slots per bucket.
     sizes = slim.groupBy(*keys).agg(
@@ -332,31 +349,24 @@ def capped_band_candidates(bands: DataFrame, bucket_cap: int | None,
                            *[f"{c}_1" for c in payload],
                            *[F.col(c).alias(f"{c}_2") for c in payload])
 
-    if group_col is None:
-        reps = rep_payload(big.filter(F.col("doc_id") == F.col("__rep_id")),
-                           [])
-        cand_big = star(big.filter(F.col("doc_id") > F.col("__rep_id"))
-                        .join(reps, keys), "__rep_id")
-    else:
-        # Per-group representative ids — again ids only, and only for
-        # oversized buckets (an empty aggregate in the common case).
-        gsizes = (slim.join(sizes.filter(F.col("__bn") > bucket_cap)
-                            .select(*keys), keys)
-                  .groupBy(*keys, group_col)
-                  .agg(F.min("doc_id").alias("__grep_id")))
-        bigg = big.join(gsizes, [*keys, group_col])
-        grep_rows = bigg.filter(F.col("doc_id") == F.col("__grep_id"))
-        members = star(
-            bigg.filter(F.col("doc_id") > F.col("__grep_id"))
-            .join(rep_payload(grep_rows, [group_col]),
-                  [*keys, group_col]), "__grep_id")
-        group_reps = star(
-            grep_rows.filter(F.col("doc_id") > F.col("__rep_id"))
-            .join(rep_payload(big.filter(F.col("doc_id")
-                                         == F.col("__rep_id")), []),
-                  keys), "__rep_id")
-        cand_big = members.unionByName(group_reps)
-    cand = cand_small.unionByName(cand_big)
+    # Per-group representative ids — again ids only, and only for
+    # oversized buckets (an empty aggregate in the common case).
+    gsizes = (slim.join(sizes.filter(F.col("__bn") > bucket_cap)
+                        .select(*keys), keys)
+              .groupBy(*keys, group_col)
+              .agg(F.min("doc_id").alias("__grep_id")))
+    bigg = big.join(gsizes, [*keys, group_col])
+    grep_rows = bigg.filter(F.col("doc_id") == F.col("__grep_id"))
+    members = star(
+        bigg.filter(F.col("doc_id") > F.col("__grep_id"))
+        .join(rep_payload(grep_rows, [group_col]),
+              [*keys, group_col]), "__grep_id")
+    group_reps = star(
+        grep_rows.filter(F.col("doc_id") > F.col("__rep_id"))
+        .join(rep_payload(big.filter(F.col("doc_id")
+                                     == F.col("__rep_id")), []),
+              keys), "__rep_id")
+    cand = cand_small.unionByName(members.unionByName(group_reps))
     return cand.distinct() if distinct else cand
 
 
@@ -365,13 +375,11 @@ def _lsh_candidate_verify(sh: DataFrame, bands: DataFrame, threshold: float,
                           ) -> DataFrame:
     """Shared LSH tail: banded candidate self-join (bucket-capped) →
     exact-Jaccard verify restricted to candidates. ``sh``:
-    (doc_id, shingle); ``bands``: (doc_id, band_id, band_key[, sig_hash]),
+    (doc_id, shingle); ``bands``: (doc_id, sig_hash, band_id, band_key),
     checkpointed or parquet-backed by the caller (see
-    :func:`capped_band_candidates`). sig_hash (absent in band tables
-    materialized before it existed) turns oversized-bucket stars into
-    per-signature-group stars."""
-    group = "sig_hash" if "sig_hash" in bands.columns else None
-    cand = capped_band_candidates(bands, bucket_cap, group_col=group)
+    :func:`capped_band_candidates`); sig_hash groups the oversized-bucket
+    stars."""
+    cand = capped_band_candidates(bands, bucket_cap, group_col="sig_hash")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     shared = (
         cand.join(sh.alias("s1"), F.col("doc_id_1") == F.col("s1.doc_id"))
@@ -402,8 +410,7 @@ def _lsh_candidate_verify(sh: DataFrame, bands: DataFrame, threshold: float,
 
 def _normed_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return (
-        docs.filter(F.col(text_col).isNotNull()
-                    & (F.col(text_col).rlike(r"\S")))
+        docs.filter(has_text(text_col))
         .select(F.col(id_col).alias("doc_id"),
                 norm_text(text_col).alias("norm"))
     )

@@ -49,24 +49,20 @@ def normalize_corpus(corpus: DataFrame, id_col: str,
         l2_normalize(F.col(vec_col)).alias("embedding"))
 
 
-def _update_centroids(assigned: DataFrame) -> DataFrame:
-    """Normalized per-cluster mean. posexplode → hash aggregate on
-    (centroid_id, dim) → rebuild the array ordered by dim. Empty clusters
-    simply vanish (their centroid attracts nothing next round)."""
+def keyed_vector_mean(df: DataFrame, keys: list[str], vec_col: str,
+                      out_col: str) -> DataFrame:
+    """Elementwise mean of ``vec_col`` per ``keys``: posexplode →
+    (key, dim) sum and count → rebuild the array ordered by dim. The one
+    Lloyd update sum, shared by k-means (normalized afterwards) and PQ
+    codebook training. Keys with no rows simply vanish."""
     per_dim = (
-        assigned.select("centroid_id",
-                        F.posexplode("embedding").alias("dim", "x"))
-        .groupBy("centroid_id", "dim")
+        df.select(*keys, F.posexplode(vec_col).alias("dim", "x"))
+        .groupBy(*keys, "dim")
         .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
     )
-    rebuilt = (
-        per_dim.groupBy("centroid_id")
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "sx", "n"))),
-            lambda s: s["sx"] / s["n"]).alias("mean_vec"))
-    )
-    return rebuilt.select(
-        "centroid_id", l2_normalize(F.col("mean_vec")).alias("embedding"))
+    return per_dim.groupBy(*keys).agg(F.transform(
+        F.array_sort(F.collect_list(F.struct("dim", "sx", "n"))),
+        lambda s: s["sx"] / s["n"]).alias(out_col))
 
 
 def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
@@ -108,9 +104,15 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
     for _ in range(iters):
         assigned = ivf_assign(corpus, centroids, "vec_id", "embedding",
                               "centroid_id", "embedding", nprobe=1)
+        # normalized per-cluster mean; an empty cluster vanishes (its
+        # centroid attracts nothing next round)
+        centroids = keyed_vector_mean(
+            assigned.filter(trainable), ["centroid_id"], "embedding",
+            "mean_vec",
+        ).select("centroid_id",
+                 l2_normalize(F.col("mean_vec")).alias("embedding"))
         # cache: the assignment feeds one aggregate; the centroid table it
         # produces is small, so only IT persists across the loop boundary
-        centroids = _update_centroids(assigned.filter(trainable))
         centroids = centroids.localCheckpoint(eager=False)
     return centroids
 

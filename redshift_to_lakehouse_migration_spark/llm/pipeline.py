@@ -7,12 +7,25 @@ the full funnel a training-data team runs before tokenization —
     non-canonical) → benchmark decontamination → stratified sampling
     → sequence packing
 
-Every stage reuses the exact operator the standalone queries verify
-against DuckDB (`corpus_prep` gates, `dedup_exact` keeper rule,
-`dedup_clusters` components, `contamination_check` gram overlap,
-`sample_stratified` md5 thresholds, `pack_sequences` binning), so the
-composed pipeline inherits their per-stage oracles; the composed funnel
-itself is value-checked end-to-end by the `corpus_funnel` query oracle.
+Each stage calls the same rule function as the standalone query that
+verifies it against DuckDB, so the composed pipeline inherits those
+per-stage oracles:
+
+- raw: ``llm.dedup.has_text`` + ``ws_token_count`` (`corpus_prep` calls
+  :func:`stage_raw` itself);
+- gated: :func:`gate_predicate` (`corpus_prep`);
+- exact_dedup: ``llm.dedup.content_hash``, keeping the min doc_id
+  (`dedup_exact`, `corpus_prep`);
+- near_dup_canonical: ``llm.dedup.shingle_blocks`` +
+  ``near_dup_components`` (`dedup_ngram_jaccard`, `dedup_clusters`);
+- decontaminated: ``queries.curation.is_bench`` + ``gram_tokens`` /
+  ``word_grams`` (`contamination_check`);
+- sampled: ``queries.sampling.sample_rule`` (`sample_stratified`);
+- packing: ``queries.sampling.assign_pack_bins`` + ``pack_bin_stats``
+  (`pack_sequences`).
+
+The composed funnel itself is value-checked end-to-end by the
+`corpus_funnel` query oracle.
 
 The stage builders are pure DataFrame functions, wired once by
 ``_chain``. ``run_corpus_pipeline`` writes each stage to parquet like a
@@ -29,19 +42,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bind
-from ..queries.curation import BENCH_MOD, NGRAM_N, gram_tokens, word_grams
-from ..queries.sampling import DEFAULT_CEILING, STRATUM_CEILING
-from .components import connected_components
-from .dedup import norm_text, ws_token_count
+from ..queries.curation import NGRAM_N, gram_tokens, is_bench, word_grams
+from ..queries.sampling import sample_rule
+from .dedup import (content_hash, has_text, near_dup_components,
+                    shingle_blocks, ws_token_count)
 
 
 def stage_raw(docs: DataFrame) -> DataFrame:
     """Non-empty documents with the token count every later stage reuses."""
-    text = F.col("text")
     return (
-        docs.filter(text.isNotNull() & text.rlike(r"\S"))
+        docs.filter(has_text("text"))
         .select("doc_id", "lang", "text",
-                ws_token_count(text).cast("long").alias("n_tokens"))
+                ws_token_count("text").cast("long").alias("n_tokens"))
     )
 
 
@@ -69,39 +81,20 @@ def stage_gate(raw: DataFrame) -> DataFrame:
 
 
 def stage_exact_dedup(gated: DataFrame) -> DataFrame:
-    """Keep the min doc_id per normalized-content hash (`dedup_exact`)."""
-    hashed = gated.withColumn("content_hash", F.md5(norm_text("text")))
+    """Keep the min doc_id per ``content_hash`` (`dedup_exact`)."""
+    hashed = gated.withColumn("content_hash", content_hash("text"))
     keepers = hashed.groupBy("content_hash").agg(
         F.min("doc_id").alias("doc_id"))
     return hashed.join(keepers, ["content_hash", "doc_id"]) \
         .drop("content_hash")
 
 
-def build_shingle_blocks(deduped: DataFrame) -> DataFrame:
-    """The (doc_id, shingle, block) signature table the near-dup stage
-    joins on — built from the exact-dedup survivors with the boilerplate
-    DF cap already applied. Both funnel entry points keep it (parquet or
-    checkpoint): the pair self-join and the size denominators then read
-    the compact signature table instead of re-shingling the corpus (3
-    scans → 1 at 100 TB, the same discipline as `materialize_minhash`)."""
-    from .dedup import capped_shingle_blocks, shingles
-    normed = deduped.select("doc_id", norm_text("text").alias("norm"))
-    sh = shingles(normed, "doc_id", "norm")
-    blocks = normed.select("doc_id",
-                           F.substring("norm", 1, 16).alias("block"))
-    return capped_shingle_blocks(sh, blocks)
-
-
 def stage_near_dup_canonical(deduped: DataFrame,
-                             shingle_blocks: DataFrame) -> DataFrame:
-    """Drop non-canonical members of near-dup clusters: blocked 3-gram
-    Jaccard pairs (threshold 0.4, as `dedup_ngram_jaccard`) over the
-    :func:`build_shingle_blocks` table → connected components → keep
-    component-min docs and singletons."""
-    from .dedup import jaccard_pairs_from_capped
-    pairs = jaccard_pairs_from_capped(shingle_blocks, threshold=0.4) \
-        .select("doc_id_1", "doc_id_2")
-    comp = connected_components(pairs, "doc_id_1", "doc_id_2")
+                             signatures: DataFrame) -> DataFrame:
+    """Drop non-canonical members of near-dup clusters: the
+    ``near_dup_components`` of the ``shingle_blocks`` table
+    ``signatures`` → keep component-min docs and singletons."""
+    comp = near_dup_components(signatures)
     return (
         deduped.join(comp, deduped["doc_id"] == comp["node"], "left")
         .filter(F.col("comp").isNull()
@@ -123,12 +116,11 @@ def stage_decontaminate(canonical: DataFrame,
     NGRAM_N-gram with the benchmark set (same rule as
     `contamination_check`; short docs carry no grams and pass)."""
     bench_grams = (
-        all_docs.filter((F.col("doc_id") % BENCH_MOD == 0)
-                        & F.col("text").isNotNull())
+        all_docs.filter(is_bench() & F.col("text").isNotNull())
         .select(F.explode(_grams(F.col("text"))).alias("gram"))
         .distinct()
     )
-    corpus = canonical.filter(F.col("doc_id") % BENCH_MOD != 0)
+    corpus = canonical.filter(~is_bench())
     dirty = (
         corpus.select("doc_id", F.explode(_grams(F.col("text"))).alias("gram"))
         .join(F.broadcast(bench_grams), "gram")
@@ -138,13 +130,10 @@ def stage_decontaminate(canonical: DataFrame,
 
 
 def stage_sample(clean: DataFrame) -> DataFrame:
-    """Deterministic stratified sample (the md5-threshold rule of
+    """Deterministic stratified sample (``sample_rule``, as
     `sample_stratified`)."""
-    ceiling = F.when(F.col("lang") == "en",
-                     F.lit(STRATUM_CEILING["en"])) \
-        .otherwise(F.lit(DEFAULT_CEILING))
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    return clean.filter(bucket < ceiling)
+    keep, _, _ = sample_rule()
+    return clean.filter(keep)
 
 
 def stage_pack(sampled: DataFrame) -> DataFrame:
@@ -180,7 +169,7 @@ def _chain(docs: DataFrame, keep) -> DataFrame:
                  "exact_dedup")
     # The pair join and the size denominators (3 consumers) read the kept
     # signature table instead of re-shingling the exact_dedup table.
-    shb = keep(lambda: build_shingle_blocks(exact), "shingle_blocks", None)
+    shb = keep(lambda: shingle_blocks(exact), "shingle_blocks", None)
     canon = keep(lambda: stage_near_dup_canonical(exact, shb),
                  "canonical", "near_dup_canonical")
     # `raw` has the same benchmark gram set as `docs`: the filtered-out

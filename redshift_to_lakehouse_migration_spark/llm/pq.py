@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .kmeans import keyed_vector_mean
 from .similarity import (SIM_DIGITS, _top_k, cosine,
                          is_finite_vector)
 
@@ -103,19 +104,6 @@ def assign_codes(sub: DataFrame, codebook: DataFrame,
                       F.col("b.sv").alias("subvec"))
 
 
-def _update_codebook(assigned: DataFrame) -> DataFrame:
-    """Euclidean mean per (subspace, code) — posexplode partial sums."""
-    per_dim = (assigned
-               .select("subspace", "code",
-                       F.posexplode("subvec").alias("d", "x"))
-               .groupBy("subspace", "code", "d")
-               .agg(F.sum("x").alias("sx"), F.count("*").alias("n")))
-    return (per_dim.groupBy("subspace", "code")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "sx", "n"))),
-                lambda s: s["sx"] / s["n"]).alias("centroid")))
-
-
 def train_codebook(sub: DataFrame, init: DataFrame,
                    iters: int = 2) -> DataFrame:
     """Per-subspace Lloyd iterations. ``init``: (subspace, code, centroid).
@@ -137,8 +125,9 @@ def train_codebook(sub: DataFrame, init: DataFrame,
     codebook = init
     for _ in range(iters):
         assigned = assign_codes(sub, codebook)
-        codebook = _update_codebook(
-            assigned.filter(is_finite_vector(F.col("subvec")))
+        codebook = keyed_vector_mean(
+            assigned.filter(is_finite_vector(F.col("subvec"))),
+            ["subspace", "code"], "subvec", "centroid",
         ).localCheckpoint(eager=False)
     return codebook
 

@@ -60,52 +60,25 @@ for _m in _MODULES:
 # iteration order).  Registry iteration order is therefore part of the
 # driver contract.
 #
-# Round-8 rotation is MACHINE-DERIVED (VERDICT r7 directive #2): three
-# rounds of hand-rotation each left a "see-saw remainder" — post-rotation
-# edits to queries the next sample did not cover.  `tools/staleness.py`
-# now derives the sample from git: it maps every query to its defining
-# source spans (query fn closure + oracle statement + every module-level
-# name the oracle f-string interpolates, transitively), blames each span
-# for its newest commit, and compares against the snapshot commit of the
-# query's newest green CORRECTNESS round.  On the r7 artifacts it found
-# 14 stale queries — the judge's see-saw list (0e31103 cosine-NULLIF:
-# knn_bruteforce/knn_ivf/knn_lsh_bucketed/dedup_embedding_cosine;
-# e792cd7 shared pack rule: pack_sequences; corpus_prep/corpus_funnel)
-# MINUS ann_lsh_buckets (its oracle VALUE is byte-identical across
-# 0e31103 — the judge over-listed; verified by evaluating ORACLES at both
-# commits) PLUS seven the hand-rotation also missed: 62474ff
-# ("fix four r6 advice items", pre-rotation but post-r6-snapshot)
-# version-proofed oracles of text_stats/token_count_bpe/token_histogram/
-# dq_documents/dedup_exact/dedup_ngram_jaccard/dedup_clusters, none
-# r7-sampled.  Those 14 lead this sample; the remaining 36 slots are the
-# least-recently-sampled fresh queries (all r6).  Spans shared by more
-# queries than the sample holds (session.py get_spark, tables.py load;
-# coverage 95/98) are excluded from per-query staleness — a change there
-# can never be covered by a 50-slot sample and is gated by the in-repo
-# full replica instead.  tests/test_staleness.py asserts stale ⊆ this
-# tuple on every suite run, so a late edit that misses the sample fails
-# pytest instead of surfacing in next round's verdict.  Order is
-# cheapest-first within each tier (r7 sf0.1 bench medians) so an early
-# driver timeout costs the fewest rows.
+# The stale set is MACHINE-DERIVED: `tools/staleness.py` maps every
+# query to its defining source spans (query fn closure + oracle
+# statement + every module-level name the oracle f-string interpolates,
+# transitively), blames each span for its newest commit, and calls a
+# query stale when that commit post-dates the snapshot of its newest
+# green CORRECTNESS round; a span in a file with uncommitted edits
+# counts as changed, so the stale set of a dirty tree is a
+# superset of the one after the commit.  Spans shared by more queries
+# than the sample holds (session.py get_spark, tables.py load) are
+# excluded — a change there can never be covered by a 50-slot sample and
+# is gated by the in-repo full replica instead.  The rule: the tuple
+# holds every stale query.  A change appends the stale queries it lacks
+# (in `tools/staleness.py --suggest` order: cheapest-first by the newest
+# bench medians) and drops as many fresh entries, most recently sampled
+# first; every other entry keeps its order.  tests/test_staleness.py
+# asserts stale ⊆ this tuple on every suite run, so an edit that misses
+# the sample fails pytest instead of surfacing in the next round's
+# verdict.
 DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
-    # -- r12 rotation (tools/staleness.py --suggest on the r12 tree):
-    #    the stale tier leads -- every query whose engine spans changed
-    #    this round (the size-adaptive spread() touches the whole
-    #    documents/embeddings-scanning surface, plus the materialize-
-    #    toggle dedup/curation/funnel sites and the components
-    #    consumers), cheapest-first within the tier; the remaining
-    #    slots are the least-recently-sampled fresh queries (newest
-    #    green round ASC). The shared-estimate/estimator cleanup adds
-    #    the pack/mix and SQL-API pricing queries (their tables.py and
-    #    llm/dedup.py spans) to the stale tier, displacing the four
-    #    most-recently-sampled fresh tail entries. The one-corpus-funnel
-    #    change's list is --suggest's output on its UNCOMMITTED tree,
-    #    where the tool counts every query with a span in a dirty file
-    #    as stale: all of queries/analytics.py's queries lead, though
-    #    that change edits only recon_global_aggregates,
-    #    recon_metrics_unpivot and price_percentiles there. Once it is
-    #    committed the other analytics entries are fresh again and the
-    #    list stays a superset of the stale set --
     "dq_accepted_values",
     "masked_customers",
     "order_status_histogram",
@@ -140,13 +113,7 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     "dedup_embedding_cosine",
     "recon_metrics_unpivot",
     "dedup_simhash",
-    "agg_pricing_summary",
-    "part_brand_revenue",
-    "fuzzy_customer_pairs",
-    "premium_payment_summary",
-    "top_customers_by_revenue",
     "dedup_ngram_jaccard",
-    "market_basket_pairs",
     "dedup_simhash_pairs",
     "knn_pq_adc",
     "price_percentiles",
@@ -156,6 +123,12 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     "knn_ivfpq_refined",
     "dedup_clusters",
     "corpus_funnel",
+    "sample_stratified",
+    "sample_per_stratum",
+    "pack_sequences",
+    "mix_datasets",
+    "pack_sequences_rows",
+    "dedup_exact",
 )
 
 _missing = [n for n in DRIVER_SAMPLE_PRIORITY if n not in QUERIES]

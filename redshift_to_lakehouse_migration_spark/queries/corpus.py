@@ -16,9 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..llm.dedup import DEFAULT_SHINGLE_DF_CAP
 from ..tables import SPREAD_TEXT_MIN_BYTES_PER_CORE, load, spread
-from .curation import BENCH_MOD
+from .curation import BENCH_MOD, NGRAM_N
+from .llm_dedup import COMPONENTS_CTES, NORM_SQL, near_dup_pairs_ctes
 from .llm_text import _STOP_COUNT_SQL
 from .sampling import DEFAULT_CEILING, STRATUM_CEILING
 
@@ -39,14 +39,14 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {"corpus_funnel": corpus_funnel}
 
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')"
-_GRAMS = ("list_transform(generate_series(1, greatest(len(t) - 4, 0)), "
-          "i -> array_to_string(t[i:i+4], ' '))")
+_GRAMS = ("list_transform(generate_series(1, greatest(len(t) - "
+          f"{NGRAM_N - 1}, 0)), i -> array_to_string(t[i:i+{NGRAM_N - 1}], "
+          "' '))")
 
 ORACLES = {
     "corpus_funnel": f"""
     WITH RECURSIVE base AS (
-        SELECT doc_id, lang, text, {_NORM} AS norm,
+        SELECT doc_id, lang, text, {NORM_SQL} AS norm,
                CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g'), ' '), ' '))
                     AS BIGINT) AS n_tokens
         FROM documents
@@ -63,57 +63,13 @@ ORACLES = {
     ), exact AS (
         SELECT * FROM gated
         QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY md5(norm))
-    ), tok AS (
-        SELECT doc_id, substr(norm, 1, 16) AS block,
-               string_split(norm, ' ') AS toks
-        FROM exact
-    ), sh AS (
-        SELECT doc_id, block, unnest(list_distinct(
-            [array_to_string(toks[i:i+2], ' ')
-             for i in range(1, greatest(len(toks) - 2, 1) + 1)]))
-            AS shingle
-        FROM tok
-    ), shf AS (
-        -- both engines drop boilerplate shingles (within-block document
-        -- frequency above the cap) before the quadratic pair join
-        SELECT doc_id, block, shingle FROM (
-            SELECT doc_id, block, shingle,
-                   COUNT(*) OVER (PARTITION BY block, shingle) AS df
-            FROM sh)
-        WHERE df <= {DEFAULT_SHINGLE_DF_CAP}
-    ), sizes AS (
-        SELECT doc_id, COUNT(*) AS n_shingles FROM shf GROUP BY doc_id
-    ), rawpairs AS (
-        SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-               COUNT(*) AS shared_shingles
-        FROM shf a JOIN shf b
-          ON a.shingle = b.shingle AND a.block = b.block
-         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), jpairs AS (
-        SELECT p.doc_id_1, p.doc_id_2
-        FROM rawpairs p
-        JOIN sizes s1 ON p.doc_id_1 = s1.doc_id
-        JOIN sizes s2 ON p.doc_id_2 = s2.doc_id
-        WHERE p.shared_shingles
-              / (s1.n_shingles + s2.n_shingles - p.shared_shingles) >= 0.4
-    ), sym AS (
-        SELECT doc_id_1 AS a, doc_id_2 AS b FROM jpairs
-        UNION
-        SELECT doc_id_2, doc_id_1 FROM jpairs
-    ), reach(node, r) AS (
-        SELECT a, a FROM sym
-        UNION
-        SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-    ), comp AS (
-        SELECT node, MIN(r) AS comp FROM reach GROUP BY node
-    ), canonical AS (
+    ), {near_dup_pairs_ctes("exact")}, {COMPONENTS_CTES}, canonical AS (
         SELECT e.* FROM exact e
         LEFT JOIN comp c ON e.doc_id = c.node
         WHERE c.node IS NULL OR c.comp = e.doc_id
     ), bgrams AS (
         SELECT DISTINCT unnest({_GRAMS}) AS gram
-        FROM (SELECT string_split({_NORM}, ' ') AS t
+        FROM (SELECT string_split({NORM_SQL}, ' ') AS t
               FROM documents
               WHERE doc_id % {BENCH_MOD} = 0 AND text IS NOT NULL)
     ), dirty AS (

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..functions import bind
 from ..llm.dedup import norm_text
 from ..tables import SPREAD_TEXT_MIN_BYTES_PER_CORE, load, spread
+from .llm_dedup import NORM_SQL
 
 # Word n-gram width for the contamination check (13 is the published
 # GPT-3/PaLM convention; 5 keeps overlap observable on the tiny test corpus).
@@ -27,6 +28,11 @@ NGRAM_N = 5
 # Synthetic benchmark membership: every 97th document stands in for the
 # held-out eval set (deterministic, engine-portable).
 BENCH_MOD = 97
+
+
+def is_bench() -> F.Column:
+    """Benchmark membership of a row's ``doc_id``."""
+    return F.col("doc_id") % BENCH_MOD == 0
 
 
 def gram_tokens(text: F.Column) -> F.Column:
@@ -95,10 +101,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table (the materialize_minhash / minhash_pairs_from_tables pattern)
     # is the replicated path.
     base = _gram_arrays(spark, sf_dir).localCheckpoint(eager=False)
-    is_bench = F.col("doc_id") % BENCH_MOD == 0
-    bench_grams = (base.filter(is_bench)
+    bench_grams = (base.filter(is_bench())
                    .select(F.explode("grams").alias("gram")).distinct())
-    corpus = base.filter(~is_bench)
+    corpus = base.filter(~is_bench())
     hits = (
         corpus.select("doc_id", F.explode("grams").alias("gram"))
         .join(F.broadcast(bench_grams), "gram")
@@ -129,7 +134,7 @@ _GRAMS = f"""
                i -> array_to_string(t[i:i+{NGRAM_N - 1}], ' ')))) AS gram
     FROM (
         SELECT doc_id, lang,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), ' ') AS t
+               string_split({NORM_SQL}, ' ') AS t
         FROM documents
     )
     WHERE len(t) >= {NGRAM_N}

@@ -36,24 +36,26 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                   min_bytes_per_core=SPREAD_TEXT_MIN_BYTES_PER_CORE)
 
 
+def _text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _docs(spark, sf_dir).filter(D.has_text("text"))
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).filter(
-        F.col("text").rlike(r"\S"))
-    return D.exact_duplicates(docs, "doc_id", "text")
+    return D.exact_duplicates(_text_docs(spark, sf_dir), "doc_id", "text")
+
+
+def _shingle_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # checkpointed: the Jaccard plan reads it three times (both pair-join
+    # sides + the size denominators; see llm.dedup.shingle_blocks)
+    return D.shingle_blocks(_text_docs(spark, sf_dir)) \
+        .localCheckpoint(eager=False)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked pairwise 3-gram Jaccard ≥ 0.4 (16-char prefix blocks)."""
-    normed = (
-        _docs(spark, sf_dir)
-        .filter(F.col("text").isNotNull()
-                & (F.col("text").rlike(r"\S")))
-        .select("doc_id", D.norm_text("text").alias("norm"))
-    )
-    sh = D.shingles(normed, "doc_id", "norm")
-    blocks = normed.select("doc_id",
-                           F.substring("norm", 1, 16).alias("block"))
-    return D.jaccard_pairs(sh, blocks, threshold=0.4)
+    """Blocked pairwise 3-gram Jaccard ≥ ``NEAR_DUP_JACCARD`` (16-char
+    prefix blocks)."""
+    return D.jaccard_pairs_from_capped(_shingle_blocks(spark, sf_dir),
+                                       D.NEAR_DUP_JACCARD)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,16 +83,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper = min doc_id per component — the step that turns pair detection
     into an actual drop list. Iterative min-label propagation
     (`llm/components.py`); the DuckDB oracle replays it as a recursive CTE."""
-    from ..llm.components import connected_components
-    pairs = dedup_ngram_jaccard(spark, sf_dir) \
-        .select("doc_id_1", "doc_id_2")
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("text").isNotNull()
-                & (F.col("text").rlike(r"\S")))
-        .select("doc_id")
-    )
-    comp = connected_components(pairs, "doc_id_1", "doc_id_2")
+    comp = D.near_dup_components(_shingle_blocks(spark, sf_dir))
+    docs = _text_docs(spark, sf_dir).select("doc_id")
     labeled = (
         docs.join(comp, docs["doc_id"] == comp["node"], "left")
         .select(docs["doc_id"],
@@ -117,19 +111,84 @@ QUERIES = {
     "dedup_clusters": dedup_clusters,
 }
 
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')"
+# DuckDB twin of ``llm.dedup.norm_text`` over the ``text`` column.
+NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' ')"
 
-# Both engines drop shingles whose within-block document frequency exceeds
-# the cap (quadratic-join boilerplate; see llm/dedup.py) — the filter is
-# deterministic, so the oracle mirrors it exactly.
-_DF_CAP = D.DEFAULT_SHINGLE_DF_CAP
-_SHF_SQL = f"""
-        ), shf AS (
-            SELECT doc_id, block, shingle FROM (
-                SELECT doc_id, block, shingle,
-                       COUNT(*) OVER (PARTITION BY block, shingle) AS df
-                FROM sh)
-            WHERE df <= {_DF_CAP}"""
+# The non-empty documents with their normal form.
+_NORMED_DOCS_SQL = f"""SELECT doc_id, {NORM_SQL} AS norm FROM documents
+        WHERE text IS NOT NULL AND regexp_matches(text, '\\S')"""
+
+# DuckDB twin of ``llm.dedup.shingles`` (k=3) over a ``toks`` list.
+_SHINGLES_SQL = """list_distinct(
+            [array_to_string(toks[i:i+2], ' ')
+             for i in range(1, greatest(len(toks) - 2, 1) + 1)])"""
+
+
+def near_dup_pairs_ctes(src: str) -> str:
+    """tok → sh → shf → sizes → shared → pairs over a CTE ``src`` of
+    (doc_id, norm): the DuckDB twin of ``llm.dedup.shingle_blocks`` +
+    ``jaccard_pairs_from_capped``. ``pairs`` holds (doc_id_1, doc_id_2,
+    shared_shingles, n_shingles_1, n_shingles_2, jaccard) at Jaccard ≥
+    ``NEAR_DUP_JACCARD``. Both engines drop shingles whose within-block
+    document frequency exceeds the cap (quadratic-join boilerplate) — the
+    filter is deterministic, so the oracle mirrors it exactly.
+
+    ``pairs`` is MATERIALIZED for the recursive CTE of
+    ``COMPONENTS_CTES``, which reads it: inline, DuckDB 1.0 took 44.9 s
+    on the `corpus_funnel` oracle at sf0.1 (4 threads) and 9.3 s on
+    `dedup_clusters`; materialized, 3.0 s and 1.7 s, identical rows."""
+    return f"""tok AS (
+        SELECT doc_id, substr(norm, 1, 16) AS block,
+               string_split(norm, ' ') AS toks
+        FROM {src}
+    ), sh AS (
+        SELECT doc_id, block, unnest({_SHINGLES_SQL}) AS shingle
+        FROM tok
+    ), shf AS (
+        SELECT doc_id, block, shingle FROM (
+            SELECT doc_id, block, shingle,
+                   COUNT(*) OVER (PARTITION BY block, shingle) AS df
+            FROM sh)
+        WHERE df <= {D.DEFAULT_SHINGLE_DF_CAP}
+    ), sizes AS (
+        SELECT doc_id, COUNT(*) AS n_shingles FROM shf GROUP BY doc_id
+    ), shared AS (
+        SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
+               COUNT(*) AS shared_shingles
+        FROM shf a JOIN shf b
+          ON a.shingle = b.shingle AND a.block = b.block
+         AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ), pairs AS MATERIALIZED (
+        SELECT p.doc_id_1, p.doc_id_2, p.shared_shingles,
+               s1.n_shingles AS n_shingles_1,
+               s2.n_shingles AS n_shingles_2,
+               p.shared_shingles
+               / (s1.n_shingles + s2.n_shingles - p.shared_shingles)
+                   AS jaccard
+        FROM shared p
+        JOIN sizes s1 ON p.doc_id_1 = s1.doc_id
+        JOIN sizes s2 ON p.doc_id_2 = s2.doc_id
+        WHERE p.shared_shingles
+              / (s1.n_shingles + s2.n_shingles - p.shared_shingles)
+              >= {D.NEAR_DUP_JACCARD}
+    )"""
+
+
+# sym → reach → comp over the ``pairs`` CTE: min-label connected
+# components (``llm.components.connected_components``) as a recursive
+# CTE — the query needs ``WITH RECURSIVE``.
+COMPONENTS_CTES = """sym AS (
+        SELECT doc_id_1 AS a, doc_id_2 AS b FROM pairs
+        UNION
+        SELECT doc_id_2, doc_id_1 FROM pairs
+    ), reach(node, r) AS (
+        SELECT a, a FROM sym
+        UNION
+        SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
+    ), comp AS (
+        SELECT node, MIN(r) AS comp FROM reach GROUP BY node
+    )"""
 
 ORACLES = {
     "dedup_exact": f"""
@@ -139,89 +198,20 @@ ORACLES = {
             COUNT(*) AS member_count,
             MAX(doc_id) AS max_doc_id,
             COUNT(*) > 1 AS has_duplicates
-        FROM (SELECT doc_id, {_NORM_SQL} AS norm FROM documents
+        FROM (SELECT doc_id, {NORM_SQL} AS norm FROM documents
               WHERE text IS NOT NULL AND regexp_matches(text, '\\S'))
         GROUP BY md5(norm)
     """,
     "dedup_ngram_jaccard": f"""
-        WITH docs AS (
-            SELECT doc_id, {_NORM_SQL} AS norm FROM documents
-            WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
-        ), tok AS (
-            SELECT doc_id, substr(norm, 1, 16) AS block,
-                   string_split(norm, ' ') AS toks
-            FROM docs
-        ), sh AS (
-            SELECT doc_id, block, unnest(list_distinct(
-                [array_to_string(toks[i:i+2], ' ')
-                 for i in range(1, greatest(len(toks) - 2, 1) + 1)]))
-                AS shingle
-            FROM tok{_SHF_SQL}
-        ), sizes AS (
-            SELECT doc_id, COUNT(*) AS n_shingles FROM shf GROUP BY doc_id
-        ), pairs AS (
-            SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-                   COUNT(*) AS shared_shingles
-            FROM shf a JOIN shf b
-              ON a.shingle = b.shingle AND a.block = b.block
-             AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT p.doc_id_1, p.doc_id_2, p.shared_shingles,
-               s1.n_shingles AS n_shingles_1,
-               s2.n_shingles AS n_shingles_2,
-               p.shared_shingles
-               / (s1.n_shingles + s2.n_shingles - p.shared_shingles)
-                   AS jaccard
-        FROM pairs p
-        JOIN sizes s1 ON p.doc_id_1 = s1.doc_id
-        JOIN sizes s2 ON p.doc_id_2 = s2.doc_id
-        WHERE p.shared_shingles
-              / (s1.n_shingles + s2.n_shingles - p.shared_shingles) >= 0.4
+    WITH docs AS (
+        {_NORMED_DOCS_SQL}
+    ), {near_dup_pairs_ctes("docs")}
+    SELECT * FROM pairs
     """,
-}
-
-ORACLES["dedup_clusters"] = f"""
+    "dedup_clusters": f"""
     WITH RECURSIVE docs AS (
-        SELECT doc_id, {_NORM_SQL} AS norm FROM documents
-        WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
-    ), tok AS (
-        SELECT doc_id, substr(norm, 1, 16) AS block,
-               string_split(norm, ' ') AS toks
-        FROM docs
-    ), sh AS (
-        SELECT doc_id, block, unnest(list_distinct(
-            [array_to_string(toks[i:i+2], ' ')
-             for i in range(1, greatest(len(toks) - 2, 1) + 1)]))
-            AS shingle
-        FROM tok{_SHF_SQL}
-    ), sizes AS (
-        SELECT doc_id, COUNT(*) AS n_shingles FROM shf GROUP BY doc_id
-    ), rawpairs AS (
-        SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2,
-               COUNT(*) AS shared_shingles
-        FROM shf a JOIN shf b
-          ON a.shingle = b.shingle AND a.block = b.block
-         AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), jpairs AS (
-        SELECT p.doc_id_1, p.doc_id_2
-        FROM rawpairs p
-        JOIN sizes s1 ON p.doc_id_1 = s1.doc_id
-        JOIN sizes s2 ON p.doc_id_2 = s2.doc_id
-        WHERE p.shared_shingles
-              / (s1.n_shingles + s2.n_shingles - p.shared_shingles) >= 0.4
-    ), sym AS (
-        SELECT doc_id_1 AS a, doc_id_2 AS b FROM jpairs
-        UNION
-        SELECT doc_id_2, doc_id_1 FROM jpairs
-    ), reach(node, r) AS (
-        SELECT a, a FROM sym
-        UNION
-        SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-    ), comp AS (
-        SELECT node, MIN(r) AS comp FROM reach GROUP BY node
-    ), labeled AS (
+        {_NORMED_DOCS_SQL}
+    ), {near_dup_pairs_ctes("docs")}, {COMPONENTS_CTES}, labeled AS (
         SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster_id
         FROM docs d LEFT JOIN comp c ON d.doc_id = c.node
     )
@@ -231,7 +221,8 @@ ORACLES["dedup_clusters"] = f"""
     JOIN (SELECT cluster_id, COUNT(*) AS cluster_size
           FROM labeled GROUP BY cluster_id) s USING (cluster_id)
     ORDER BY l.doc_id
-"""
+""",
+}
 
 # ---------------------------------------------------------------------------
 # SimHash / MinHash full oracles (VERDICT r10 #6). Previously rows-only
@@ -259,8 +250,7 @@ _SIG = " + ".join(
     f"ELSE CAST(0 AS BIGINT) END)" for i in range(60))
 _SIMHASH_CTES = f"""
     normed AS (
-        SELECT doc_id, {_NORM_SQL} AS norm FROM documents
-        WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
+        {_NORMED_DOCS_SQL}
     ), hashed AS (
         SELECT doc_id, {_H60.format(x="tok")} AS h
         FROM (SELECT doc_id, unnest(string_split(norm, ' ')) AS tok
@@ -364,14 +354,11 @@ _MH_BANDS = "\n        UNION ALL ".join(
 
 ORACLES["dedup_minhash_lsh"] = f"""
     WITH docs AS (
-        SELECT doc_id, {_NORM_SQL} AS norm FROM documents
-        WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
+        {_NORMED_DOCS_SQL}
     ), tok AS (
         SELECT doc_id, string_split(norm, ' ') AS toks FROM docs
     ), sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            [array_to_string(toks[i:i+2], ' ')
-             for i in range(1, greatest(len(toks) - 2, 1) + 1)])) AS shingle
+        SELECT doc_id, unnest({_SHINGLES_SQL}) AS shingle
         FROM tok
     ), hashed AS (
         SELECT doc_id, {_H60.format(x="shingle")} % {D.MERSENNE} AS h

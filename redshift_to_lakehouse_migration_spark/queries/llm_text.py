@@ -14,8 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import bind
-from ..llm.dedup import norm_text, ws_token_count
+from ..llm.dedup import content_hash, has_text, norm_text, ws_token_count
 from ..tables import SPREAD_TEXT_MIN_BYTES_PER_CORE, load, spread
+from .llm_dedup import NORM_SQL
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
@@ -68,7 +69,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     punct_ratio = n_punct / n_chars
     stop_ratio = n_stop / n_tokens
     return (
-        d.filter(text.isNotNull() & text.rlike(r"\S"))
+        d.filter(has_text(text))
         .select(
             F.col("doc_id"),
             F.col("lang").alias("lang_label"),
@@ -138,7 +139,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bpe = F.regexp_count(text, F.lit(_BPE_RE)).cast("long")
     n_nonspace = F.length(F.regexp_replace(text, r"\s", ""))
     return (
-        d.filter(text.isNotNull() & text.rlike(r"\S"))
+        d.filter(has_text(text))
         .select(
             F.col("doc_id"),
             n_ws.alias("n_ws_tokens"),
@@ -156,8 +157,7 @@ def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents"), spark)
     tok = F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     return (
-        d.filter(F.col("text").isNotNull()
-                 & (F.col("text").rlike(r"\S")))
+        d.filter(has_text("text"))
         .select(tok.alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
@@ -223,16 +223,16 @@ ORACLES = {
             {_PRED} = lang AS matches_label
         FROM documents
     """,
-    "doc_fingerprint": """
+    "doc_fingerprint": f"""
         SELECT
             doc_id,
-            md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '))
+            md5({NORM_SQL})
                 AS fingerprint,
-            md5(substr(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '),
+            md5(substr({NORM_SQL},
                        1, 64)) AS prefix_fingerprint,
-            md5(right(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), 64))
+            md5(right({NORM_SQL}, 64))
                 AS suffix_fingerprint,
-            length(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '))
+            length({NORM_SQL})
                 AS norm_length
         FROM documents
     """,
@@ -286,7 +286,7 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = (
         stage_raw(d).filter(gate_predicate())
         .select("doc_id", "lang",
-                F.md5(norm_text("text")).alias("content_hash"), "n_tokens")
+                content_hash("text").alias("content_hash"), "n_tokens")
     )
     # Per-language accounting at each doc's OWN language: dup groups span
     # languages in real corpora (the generator assigns lang independently
@@ -319,7 +319,7 @@ QUERIES["corpus_prep"] = corpus_prep
 ORACLES["corpus_prep"] = f"""
     WITH gated AS (
         SELECT doc_id, lang,
-               md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '))
+               md5({NORM_SQL})
                    AS content_hash,
                CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g'), ' '), ' ')) AS BIGINT)
                    AS n_tokens
@@ -437,10 +437,10 @@ def doc_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["doc_repetition_filter"] = doc_repetition_filter
 
-ORACLES["doc_repetition_filter"] = """
+ORACLES["doc_repetition_filter"] = f"""
     WITH toks AS (
         SELECT doc_id, lang,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), ' ') AS t
+               string_split({NORM_SQL}, ' ') AS t
         FROM documents
     ), grams AS (
         SELECT doc_id, lang,

@@ -65,22 +65,27 @@ def pack_bin_stats(binned: DataFrame) -> DataFrame:
             .orderBy("lang", "bin_id"))
 
 
-def _doc_bucket() -> F.Column:
-    """Deterministic 2-hex-char bucket for a document (uniform over 256)."""
-    return F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+def sample_rule() -> tuple[F.Column, F.Column, F.Column]:
+    """THE stratified-sample rule over (doc_id, lang) columns, shared by
+    :func:`sample_stratified` and the corpus runner's ``stage_sample``:
+    ``(keep, bucket, ceiling)``, where ``bucket`` is the doc's
+    deterministic 2-hex-char md5 bucket (uniform over 256), ``ceiling``
+    its language's hex-prefix ceiling, and ``keep`` = bucket < ceiling."""
+    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    ceiling = F.when(F.col("lang") == "en", F.lit(STRATUM_CEILING["en"])) \
+        .otherwise(F.lit(DEFAULT_CEILING))
+    return bucket < ceiling, bucket, ceiling
 
 
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified document sample: per-language keep rates
     via md5-prefix thresholding. Pure map-side filter — no shuffle, no
     rand(); the same rows are kept on 1 executor or 1000."""
-    d = load(spark, sf_dir, "documents")
-    ceiling = F.when(F.col("lang") == "en", F.lit(STRATUM_CEILING["en"])) \
-        .otherwise(F.lit(DEFAULT_CEILING))
+    keep, bucket, ceiling = sample_rule()
     return (
-        d.select("doc_id", "lang", "source", "n_chars",
-                 _doc_bucket().alias("bucket"), ceiling.alias("ceiling"))
-        .filter(F.col("bucket") < F.col("ceiling"))
+        load(spark, sf_dir, "documents").filter(keep)
+        .select("doc_id", "lang", "source", "n_chars",
+                bucket.alias("bucket"), ceiling.alias("ceiling"))
         .orderBy("doc_id")
     )
 

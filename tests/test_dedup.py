@@ -108,11 +108,8 @@ def test_simhash_wide_agg_matches_exploded_formulation(spark):
 
 def test_jaccard_pairs_block_confinement(spark):
     """Docs in different blocks are never compared (the scale guarantee)."""
-    docs = _corpus(spark).select(
-        "doc_id", D.norm_text("text").alias("norm"))
-    sh = D.shingles(docs, "doc_id", "norm")
-    blocks = docs.select("doc_id", F.substring("norm", 1, 16).alias("block"))
-    pairs = D.jaccard_pairs(sh, blocks, threshold=0.0).collect()
+    pairs = D.jaccard_pairs_from_capped(
+        D.shingle_blocks(_corpus(spark)), threshold=0.0).collect()
     found = {(r.doc_id_1, r.doc_id_2) for r in pairs}
     assert (1, 2) in found and (1, 3) in found
     assert not any(4 in p for p in found)   # different prefix block
@@ -251,16 +248,15 @@ def test_jaccard_shingle_df_cap_drops_boilerplate(spark):
     and a planted LOW-frequency near-dup in the same corpus must survive."""
     n = 3000
     base = spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit(BASE).alias("norm"))
+        F.col("id").alias("doc_id"), F.lit(BASE).alias("text"))
     near = spark.createDataFrame(
         [(100001, "rare uncommon tokens here exactly matching pair one"),
          (100002, "rare uncommon tokens here exactly matching pair two")],
-        "doc_id long, norm string")
+        "doc_id long, text string")
     docs = base.unionByName(near)
-    sh = D.shingles(docs, "doc_id", "norm")
-    blocks = docs.select("doc_id", F.substring("norm", 1, 16).alias("block"))
-    got = D.jaccard_pairs(sh, blocks, threshold=0.4, shingle_df_cap=1024) \
-        .collect()
+    assert D.DEFAULT_SHINGLE_DF_CAP < n
+    got = D.jaccard_pairs_from_capped(D.shingle_blocks(docs),
+                                      D.NEAR_DUP_JACCARD).collect()
     assert {(r.doc_id_1, r.doc_id_2) for r in got} == {(100001, 100002)}
 
 

@@ -9,9 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_lakehouse_migration_spark.llm.dedup import (
-    jaccard_pairs, materialize_minhash, minhash_lsh_pairs,
-    minhash_pairs_from_tables, norm_text, shingles, simhash_near_pairs,
-    simhash_signatures)
+    materialize_minhash, minhash_lsh_pairs, minhash_pairs_from_tables,
+    simhash_near_pairs, simhash_signatures)
 from redshift_to_lakehouse_migration_spark.llm.pipeline import funnel
 from redshift_to_lakehouse_migration_spark.llm.similarity import (
     cosine_near_pairs, lsh_assign)
@@ -163,14 +162,6 @@ def test_no_cartesian_in_scale_paths(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def _jaccard_pairs(spark):
-    normed = load(spark, SF, "documents").select(
-        "doc_id", norm_text("text").alias("norm"))
-    blocks = normed.select("doc_id",
-                           F.substring("norm", 1, 16).alias("block"))
-    return jaccard_pairs(shingles(normed, "doc_id", "norm"), blocks, 0.4)
-
-
 def _lsh_assigned(spark):
     return lsh_assign(load(spark, SF, "embeddings"), "vec_id", "embedding",
                       PROJECTIONS)
@@ -185,7 +176,8 @@ def _checkpointed_tables(df) -> set[int]:
 
 
 @pytest.mark.parametrize("build, n_tables", [
-    (_jaccard_pairs, 1),  # the capped shingle-block table
+    # the capped shingle_blocks table
+    (lambda spark: QUERIES["dedup_ngram_jaccard"](spark, SF), 1),
     (lambda spark: minhash_lsh_pairs(load(spark, SF, "documents"),
                                      "doc_id", "text"),
      2),  # shingle table + band table
@@ -200,7 +192,7 @@ def _checkpointed_tables(df) -> set[int]:
     (lambda spark: cosine_near_pairs(_lsh_assigned(spark), 0.35,
                                      bucket_cap=512),
      1),  # the capped embedding band table
-], ids=["jaccard_pairs", "minhash_lsh_pairs", "contamination_check",
+], ids=["dedup_ngram_jaccard", "minhash_lsh_pairs", "contamination_check",
         "funnel", "simhash_near_pairs", "cosine_near_pairs_capped"])
 def test_multi_consumer_inputs_are_checkpointed(spark, build, n_tables):
     """Each of these plans reads one expensive derived table 3+ times; the
